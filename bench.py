@@ -18,11 +18,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
 
 BENCH_QUERIES = [
     "q1_pricing_summary",
@@ -568,6 +570,18 @@ STREAMING_EXTRA_QUERIES = [
 ]
 
 
+def write_detail(detail: dict, cpus: int, root: Path = ROOT) -> str:
+    """Write one run's detail to ``BENCH_DETAIL_c{cpus}.json`` under
+    ``root``, then mirror the highest-core detail file there into
+    ``BENCH_DETAIL.json``.  Returns the per-core file's name."""
+    name = f"BENCH_DETAIL_c{cpus}.json"
+    (root / name).write_text(json.dumps(detail, indent=1))
+    per_core = {int(m.group(1)): p for p in root.glob("BENCH_DETAIL_c*.json")
+                if (m := re.fullmatch(r"BENCH_DETAIL_c(\d+)\.json", p.name))}
+    (root / "BENCH_DETAIL.json").write_text(per_core[max(per_core)].read_text())
+    return name
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -688,8 +702,8 @@ def main():
     timings, total = run_list(BENCH_QUERIES)
     streaming_timings, streaming_total = run_list(STREAMING_EXTRA_QUERIES)
 
-    detail_path = Path(__file__).resolve().parent / "BENCH_DETAIL.json"
-    detail_path.write_text(json.dumps({
+    cpus = spark.sparkContext.defaultParallelism
+    detail_name = write_detail({
         "metric": "headline_queries_total_runtime",
         "value": round(total, 3),
         "unit": "sec",
@@ -702,7 +716,8 @@ def main():
         "notes": BENCH_NOTES,
         "machine_canary": canary,
         "sf": sf,
-    }, indent=1))
+        "cpus": cpus,
+    }, cpus)
 
     # Last line stays compact: the driver tail-captures ~2 KB and the full
     # per-query map exceeded it in round 1 ("parsed": null in BENCH_r01.json).
@@ -715,7 +730,7 @@ def main():
         "streaming_extra_sec": round(streaming_total, 3),
         "n_streaming_extra": len(streaming_timings),
         "machine_canary": canary,
-        "detail": "BENCH_DETAIL.json",
+        "detail": detail_name,
     }))
 
 

@@ -186,6 +186,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     from .context import KiaraContext
+    from .io import show_string
 
     if cmd == "run":
         if not argv:
@@ -308,10 +309,7 @@ def main(argv: list[str] | None = None) -> int:
             data = value.data
             if explain and hasattr(data, "explain"):
                 data.explain("formatted")
-            if hasattr(data, "_show_string"):
-                print(data._show_string(20, 40, False))
-            else:
-                print(repr(data))
+            print(show_string(data))
         return 0
 
     if cmd == "data" and argv[:1] == ["explain"]:
@@ -341,11 +339,7 @@ def main(argv: list[str] | None = None) -> int:
             raise SystemExit("data load: missing value ref")
         ctx = KiaraContext()
         v = ctx.get_value(argv[1])
-        data = v.data
-        if hasattr(data, "_show_string"):
-            print(data._show_string(20, 40, False))
-        else:
-            print(repr(data))
+        print(show_string(v.data))
         return 0
 
     if cmd == "data" and argv[:1] == ["filter"]:
@@ -380,9 +374,7 @@ def main(argv: list[str] | None = None) -> int:
         out = outputs[v.schema.type]
         if save:
             print(f"saved {save} -> {ctx.store_value(out, alias=save)}")
-        data = out.data
-        print(data._show_string(20, 40, False)
-              if hasattr(data, "_show_string") else repr(data))
+        print(show_string(out.data))
         return 0
 
     if cmd == "operation" and argv[:1] == ["list"]:
@@ -1041,9 +1033,7 @@ def main(argv: list[str] | None = None) -> int:
             outputs = wf.process()
             for name, value in outputs.items():
                 print(f"-- {name} ({value.schema.type})")
-                data = value.data
-                print(data._show_string(20, 40, False)
-                      if hasattr(data, "_show_string") else repr(data))
+                print(show_string(value.data))
         snap = wf.snapshot()
         print(f"state {snap['state_id']}")
         return 0

@@ -10,6 +10,8 @@ truncation DuckDB applies, so both engines see identical instants.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,19 +33,71 @@ _MIN_PARALLEL_BYTES = 256 << 10
 CPU_HEAVY_TABLES = {"documents", "embeddings"}
 
 
+# The most table rows memoized per DataFrame, over its pages and show
+# strings together; past it the oldest entry is dropped first.
+PAGE_MEMO_ROWS = 1000
+
+# DataFrame -> {key: (rows, result)}, insertion-ordered.  Weak keys: an
+# entry dies with its frame.  A frame's plan is immutable, so a page is a
+# pure function of (frame, key).
+_page_memo: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_page_memo_lock = threading.Lock()
+
+
+def _memoized(df: DataFrame, key: tuple, compute, rows):
+    """``compute()`` once per ``(df, key)``.  The result, of ``rows(result)``
+    rows, is kept unless it alone exceeds ``PAGE_MEMO_ROWS``; nothing is
+    kept when ``compute`` raises."""
+    with _page_memo_lock:
+        hit = _page_memo.get(df, {}).get(key)
+    if hit is not None:
+        return hit[1]
+    result = compute()
+    n = rows(result)
+    if n <= PAGE_MEMO_ROWS:
+        with _page_memo_lock:
+            entries = _page_memo.setdefault(df, {})
+            entries[key] = (n, result)
+            kept = sum(r for r, _ in entries.values())
+            while kept > PAGE_MEMO_ROWS:
+                kept -= entries.pop(next(iter(entries)))[0]
+    return result
+
+
 def collect_table_page(df: DataFrame, offset: int, limit: int) -> dict:
     """One offset/limit page of a table for a renderer: the slice is
     pushed INTO the plan (``offset().limit()``) so only the page's rows
     ever cross to the driver; values stringify None-preserving.  Shared
     by ``render.value`` (operators/misc.py) and the html value renderer
-    (renderers.py) so the paging contract lives in one place."""
-    page = df.offset(offset).limit(limit).collect()
-    rows = [r.asDict(recursive=True) for r in page]
-    return {
-        "columns": df.columns,
-        "rows": [{k: (str(v) if v is not None else None)
-                  for k, v in r.items()} for r in rows],
-    }
+    (renderers.py) so the paging contract lives in one place.
+
+    Pages are memoized per DataFrame object, up to ``PAGE_MEMO_ROWS`` rows
+    per frame (oldest page evicted first; a bigger page is returned but
+    not kept), so a repeat read of a cached value's page runs no Spark
+    job.  Each call returns its own copy."""
+    def compute():
+        page = df.offset(offset).limit(limit).collect()
+        return {
+            "columns": df.columns,
+            "rows": [{k: (str(v) if v is not None else None)
+                      for k, v in r.asDict(recursive=True).items()}
+                     for r in page],
+        }
+
+    page = _memoized(df, ("page", offset, limit), compute,
+                     lambda p: len(p["rows"]))
+    return {"columns": list(page["columns"]),
+            "rows": [dict(r) for r in page["rows"]]}
+
+
+def show_string(data, n: int = 20) -> str:
+    """A value as the CLI prints it: Spark's ``show()`` table of the first
+    ``n`` rows (cells cut at 40 characters) for a DataFrame, memoized like
+    ``collect_table_page``; ``repr`` for anything else."""
+    if not isinstance(data, DataFrame):
+        return repr(data)
+    return _memoized(data, ("show", n),
+                     lambda: data._show_string(n, 40, False), lambda _: n)
 
 
 def cut_lineage(df: DataFrame) -> DataFrame:

@@ -121,11 +121,10 @@ class PrettyPrintValue(KiaraModule):
         return {"rendered_value": {"type": "string"}}
 
     def process(self, inputs: ValueMap, context):
-        data = inputs["value"].data
-        if isinstance(data, DataFrame):
-            n = self.config.get("max_rows", 20)
-            return {"rendered_value": data._show_string(n, 40, False)}
-        return {"rendered_value": repr(data)}
+        from ..io import show_string
+
+        return {"rendered_value": show_string(
+            inputs["value"].data, self.config.get("max_rows", 20))}
 
 
 class RenderValue(KiaraModule):

@@ -11,12 +11,18 @@ matchers :65-152, lookup :442-488, execute :517-630).  Strategies:
   as default, ``src/kiara/context/runtime_config.py:25-28``).
 
 Non-idempotent modules bypass the cache (reference ``jobs/__init__.py:466-472``).
-Because module outputs are *lazy* DataFrames, a cache hit returns the prior
-ValueMap without touching Spark executors at all.
+A cache hit returns the prior ValueMap, so it skips composition and the
+Spark jobs a module fires while building its outputs (``cut_lineage``,
+driver collects).  Module outputs are *lazy* DataFrames: consuming a hit
+re-executes its plan, except for the table pages and show strings that
+``kiara_spark.io`` memoizes per DataFrame.
 """
 
 from __future__ import annotations
 
+import json
+import logging
+import os
 import time
 from collections.abc import Mapping
 from dataclasses import dataclass, field
@@ -28,6 +34,8 @@ from ..values import ValueMap
 if TYPE_CHECKING:
     from ..context import KiaraContext
     from ..modules import KiaraModule
+
+logger = logging.getLogger(__name__)
 
 
 @dataclass
@@ -57,18 +65,23 @@ class JobRegistry:
         # ``src/kiara/registries/jobs/job_store/``): job_hash -> stored
         # output dataset paths; enables cache hits ACROSS restarts when the
         # outputs were persisted to the warehouse.
-        self._store_file = None
+        self._store_file = os.path.join(context.base_path, "job_records.json")
         self._stored: dict[str, dict] = {}
         try:
-            import json
-            import os
-
-            self._store_file = os.path.join(context.base_path, "job_records.json")
-            if os.path.isfile(self._store_file):
-                with open(self._store_file) as f:
-                    self._stored = json.load(f)
-        except OSError:
+            with open(self._store_file) as f:
+                self._stored = json.load(f)
+        except FileNotFoundError:
             pass
+        except OSError:
+            logger.warning("job store %s unreadable; starting without it",
+                           self._store_file, exc_info=True)
+        except ValueError:
+            # a torn write: quarantine it so this and every later context
+            # starts from an empty store instead of raising
+            corrupt = self._store_file + ".corrupt"
+            os.replace(self._store_file, corrupt)
+            logger.warning("job store %s is corrupt; moved to %s",
+                           self._store_file, corrupt)
 
     def _environment(self) -> dict:
         """Runtime fingerprint recorded in job records, mirroring the
@@ -168,8 +181,6 @@ class JobRegistry:
         its record; the entry is marked incomplete so ``_probe_stored``
         never serves it as a cache hit (a partial ValueMap would be
         wrong), while the archived record keeps the job auditable."""
-        import json
-
         paths = {}
         skipped = []
         for field, value in record.outputs.items():
@@ -177,7 +188,7 @@ class JobRegistry:
                 paths[field] = self._context.data_registry.store_value(value)
             except TypeError:
                 skipped.append(field)  # non-table outputs: no profile yet
-        if not record.job_hash or self._store_file is None:
+        if not record.job_hash:
             return
         self._stored[record.job_hash] = {
             "module_type": record.module_type,
@@ -185,8 +196,11 @@ class JobRegistry:
             "outputs": paths,
             "complete": not skipped,
         }
-        with open(self._store_file, "w") as f:
+        # temp file + rename: a crash mid-write leaves the old store whole
+        tmp = self._store_file + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(self._stored, f, indent=1, sort_keys=True)
+        os.replace(tmp, self._store_file)
 
     def _probe_stored(self, key: str) -> ValueMap | None:
         info = self._stored.get(key)

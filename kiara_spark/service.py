@@ -99,15 +99,11 @@ def is_running(path: str | None = None) -> bool:
 
 
 def _render_outputs(outputs) -> dict:
-    out = {}
-    for name, value in outputs.items():
-        data = value.data
-        if hasattr(data, "_show_string"):
-            rendered = data._show_string(20, 40, False)
-        else:
-            rendered = repr(data)
-        out[name] = {"type": value.schema.type, "rendered": rendered}
-    return out
+    from .io import show_string
+
+    return {name: {"type": value.schema.type,
+                   "rendered": show_string(value.data)}
+            for name, value in outputs.items()}
 
 
 def _handle(ctx, req: dict) -> tuple[dict, bool]:

@@ -87,6 +87,28 @@ def test_table_outputs_render_across_boundary(service):
     assert "r_regionkey" in out["rendered"] and "AFRICA" in out["rendered"]
 
 
+def test_repeat_run_renders_same_table_from_cache(service):
+    """A repeated table run hits the daemon's job cache and answers with
+    the same rendered show-string, now served from the page memo."""
+    from kiara_spark import service as svc
+
+    # file imports never hit the cache (not idempotent): page a query on one
+    saved = svc.request(
+        {"cmd": "run", "operation": "create.table.from.file",
+         "inputs": {"path": "/root/testdata/sf0.001/nation.parquet"},
+         "save": "svc_nation"}, path=service)
+    assert saved["ok"], saved
+    req = {"cmd": "run", "operation": "table.query.sql",
+           "inputs": {"table": "alias:svc_nation",
+                      "query": "select * from data order by n_nationkey"}}
+    first = svc.request(req, path=service)
+    second = svc.request(req, path=service)
+    assert first["ok"] and second["ok"], (first, second)
+    assert first["cache_hit"] is False and second["cache_hit"] is True
+    assert "n_nationkey" in second["outputs"]["table"]["rendered"]
+    assert second["outputs"] == first["outputs"]
+
+
 def test_status_not_running(tmp_path, monkeypatch, capsys):
     from kiara_spark.cli import main
 

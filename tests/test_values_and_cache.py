@@ -258,3 +258,146 @@ def test_property_links_survive_store_load(spark, tmp_path):
     v2 = ctx2.data_registry.load_value(path)
     assert v2.property_names == ["metadata"]
     assert v2.property_links == v.property_links
+
+
+def test_torn_job_store_is_quarantined(spark, tmp_path, caplog):
+    """A truncated ``job_records.json`` (a crash mid-write) must not make
+    every later context on that home raise: it is moved aside with a
+    warning and the next context starts from an empty store."""
+    import json
+    import logging
+
+    from kiara_spark import KiaraContext
+
+    ctx1 = KiaraContext(spark=spark, base_path=str(tmp_path))
+    ctx1.run_job("logic.and", {"a": True, "b": True})
+    ctx1.job_registry.persist_record(ctx1.job_registry.history[-1])
+    store = tmp_path / "job_records.json"
+    assert json.loads(store.read_text())
+    assert not (tmp_path / "job_records.json.tmp").exists()
+    torn = store.read_text()[:10]
+    store.write_text(torn)
+
+    with caplog.at_level(logging.WARNING, logger="kiara_spark.registries.jobs"):
+        ctx2 = KiaraContext(spark=spark, base_path=str(tmp_path))
+    assert ctx2.job_registry._stored == {}
+    assert (tmp_path / "job_records.json.corrupt").read_text() == torn
+    assert not store.exists()
+    assert "corrupt" in caplog.text
+
+    ctx2.run_job("logic.and", {"a": True, "b": False})
+    ctx2.job_registry.persist_record(ctx2.job_registry.history[-1])
+    ctx3 = KiaraContext(spark=spark, base_path=str(tmp_path))
+    assert ctx3.job_registry._stored == ctx2.job_registry._stored != {}
+
+
+# -- per-DataFrame page memo (kiara_spark.io) ------------------------------------
+
+def _spark_jobs(spark, fn):
+    """``(fn(), ids of the Spark jobs fn ran)``.  Job starts reach the
+    status tracker through the asynchronous listener bus, so the ids are
+    read once a barrier job, run after ``fn``, is visible."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"memo-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, group)
+        result = fn()
+        sc.setJobGroup(group + "-barrier", "barrier")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-barrier"):
+        assert time.monotonic() < deadline, "listener bus never caught up"
+        time.sleep(0.05)
+    return result, list(tracker.getJobIdsForGroup(group))
+
+
+def _rows(lo, hi):
+    return [{"id": str(i), "s": f"v{i * 2}"} for i in range(lo, hi)]
+
+
+@pytest.fixture
+def frame(spark):
+    return spark.range(3000).selectExpr("id", "concat('v', id * 2) as s")
+
+
+def test_repeat_page_runs_no_spark_job(spark, frame):
+    from kiara_spark.io import collect_table_page, show_string
+
+    first, miss_jobs = _spark_jobs(spark, lambda: collect_table_page(frame, 0, 20))
+    again, hit_jobs = _spark_jobs(spark, lambda: collect_table_page(frame, 0, 20))
+    assert miss_jobs and hit_jobs == []
+    assert again == first == {"columns": ["id", "s"], "rows": _rows(0, 20)}
+
+    text, miss_jobs = _spark_jobs(spark, lambda: show_string(frame))
+    again, hit_jobs = _spark_jobs(spark, lambda: show_string(frame))
+    assert miss_jobs and hit_jobs == []
+    assert again == text == frame._show_string(20, 40, False)
+    assert show_string(["not", "a", "frame"]) == repr(["not", "a", "frame"])
+
+
+def test_page_memo_keys_on_offset_and_limit(frame):
+    from kiara_spark.io import collect_table_page
+
+    for offset, limit in [(0, 5), (5, 5), (3, 10), (0, 5), (2995, 10)]:
+        page = collect_table_page(frame, offset, limit)
+        assert page["rows"] == _rows(offset, min(offset + limit, 3000))
+
+
+def test_page_memo_returns_copies(frame):
+    from kiara_spark.io import collect_table_page
+
+    page = collect_table_page(frame, 0, 3)
+    page["columns"].append("x")
+    page["rows"][0]["s"] = "changed"
+    page["rows"].append({})
+    assert collect_table_page(frame, 0, 3) == {"columns": ["id", "s"],
+                                                "rows": _rows(0, 3)}
+
+
+def test_page_memo_entry_dies_with_its_frame(spark):
+    import gc
+    import weakref
+
+    from kiara_spark import io
+
+    df = spark.range(10).selectExpr("id", "concat('v', id * 2) as s")
+    io.collect_table_page(df, 0, 5)
+    assert df in io._page_memo
+    before = len(io._page_memo)
+    ref = weakref.ref(df)
+    del df
+    gc.collect()
+    assert ref() is None
+    assert len(io._page_memo) < before
+
+
+def test_page_memo_evicts_oldest_past_row_cap(spark, frame):
+    from kiara_spark import io
+
+    assert io.PAGE_MEMO_ROWS == 1000
+    for offset in (0, 400, 800):
+        io.collect_table_page(frame, offset, 400)
+    # 1,200 rows > 1,000: the first page went
+    assert list(io._page_memo[frame]) == [("page", 400, 400), ("page", 800, 400)]
+    page, jobs = _spark_jobs(spark, lambda: io.collect_table_page(frame, 0, 400))
+    assert jobs and page["rows"] == _rows(0, 400)
+    assert list(io._page_memo[frame]) == [("page", 800, 400), ("page", 0, 400)]
+    # a page over the cap is returned but not kept
+    big = io.collect_table_page(frame, 0, 1500)
+    assert big["rows"] == _rows(0, 1500)
+    assert ("page", 0, 1500) not in io._page_memo[frame]
+
+
+def test_page_memo_keeps_nothing_when_the_page_raises(spark):
+    from kiara_spark import io
+
+    df = spark.range(3).selectExpr("raise_error(concat('boom ', id)) as x")
+    with pytest.raises(Exception, match="boom"):
+        io.collect_table_page(df, 0, 3)
+    assert df not in io._page_memo
