@@ -7,9 +7,15 @@ Characteristics (``:268-291``) gate the job cache: non-idempotent modules
 (imports) are never cache-hit, exactly like the reference's check at
 ``src/kiara/registries/jobs/__init__.py:466-472``.
 
-Spark stance: ``process`` composes *lazy* DataFrames — it must not trigger
-actions.  Materialization happens only when a pipeline output is persisted or
-the user collects, so Catalyst sees whole multi-step plans as one tree.
+Spark stance: ``process`` composes *lazy* DataFrames, so a pipeline's steps
+compose into one logical plan and Catalyst optimizes across step boundaries.
+The exceptions are eager: iterative and multiply consumed intermediates are
+materialized with ``cut_lineage`` while the module builds its outputs, and a
+few operators collect small results to the driver.
+
+Built-in modules are declared with the ``_simple_module`` factory; their
+config keys reach the operator function through ``config_kwargs``, so an
+unset key gets the function's own default.
 """
 
 from __future__ import annotations
@@ -51,8 +57,11 @@ class ModuleCharacteristics:
 class KiaraModule:
     """Operator base class.
 
-    Subclasses set ``_module_type_name`` and implement
-    ``create_inputs_schema`` / ``create_outputs_schema`` / ``process``.
+    Built-in modules are declared with ``_simple_module``, which returns a
+    subclass.  Subclass directly (set ``_module_type_name`` and implement
+    ``create_inputs_schema`` / ``create_outputs_schema`` / ``process``) when
+    a schema depends on the module config or the module needs methods of its
+    own; a direct subclass is also the plugin contract.
     """
 
     _module_type_name: str = "module"
@@ -170,6 +179,65 @@ class KiaraModule:
                 data=raw[field_name], schema=schema, pedigree=pedigree
             )
         return ValueMap(out_values)
+
+
+TABLE = {"type": "table"}
+STRING = {"type": "string"}
+DICT = {"type": "dict"}
+
+
+def _simple_module(module_type: str, inputs: dict, outputs: dict, fn, doc: str = "",
+                   characteristics: ModuleCharacteristics | None = None):
+    """Factory: declaratively minted operator module (mirrors the reference's
+    dynamically-discovered method families, ``filter.py:22-47`` etc.).
+
+    Returns a ``KiaraModule`` subclass whose ``process`` is
+    ``fn(self, inputs, context)``.  ``doc`` becomes the class docstring, so
+    a module declared without one documents as "" instead of inheriting the
+    base-class text."""
+
+    class _Mod(KiaraModule):
+        _module_type_name = module_type
+        __doc__ = doc
+
+        def create_inputs_schema(self):
+            return inputs
+
+        def create_outputs_schema(self):
+            return outputs
+
+        def process(self, im: ValueMap, context):
+            return fn(self, im, context)
+
+    if characteristics:
+        _Mod._characteristics = characteristics
+    _Mod.__name__ = "Mod_" + module_type.replace(".", "_")
+    return _Mod
+
+
+def _cfg(self, im: ValueMap, *names):
+    """Resolve params from module config first, then inputs."""
+    out = []
+    for n in names:
+        if n in self.config:
+            out.append(self.config[n])
+        elif n in im:
+            out.append(im[n].data)
+        else:
+            out.append(None)
+    return out
+
+
+def config_kwargs(self, *names: str, **renamed: str) -> dict:
+    """Operator-function keyword arguments taken from the module config.
+
+    ``names`` are config keys passed under their own name; ``renamed`` maps
+    a function parameter to the config key that feeds it
+    (``id_col="id_column"``).  Only keys the config actually sets are
+    returned, so an unset key falls through to the operator function's own
+    default: the function signature is the single source of defaults."""
+    pairs = [(n, n) for n in names] + list(renamed.items())
+    return {param: self.config[key] for param, key in pairs if key in self.config}
 
 
 class ModuleRegistry:

@@ -27,7 +27,7 @@ from pyspark.sql.window import Window
 from ..io import cut_lineage
 from ..operations import Operation
 from ..values import ValueMap
-from .tables import TABLE, _simple_module
+from ..modules import TABLE, _simple_module, config_kwargs
 from .text import tokens_col
 
 # Conservative, lookaround-free patterns — identical semantics in Java
@@ -486,7 +486,7 @@ TableRedactPii = _simple_module(
     {"table": TABLE},
     {"table": TABLE},
     lambda self, im, ctx: {"table": redact_pii(
-        im["table"].data, self.config.get("text_column", "text"))},
+        im["table"].data, **config_kwargs(self, text_col="text_column"))},
     doc="Mask emails/IPs/phones + per-kind counts; map-only regex pass.",
 )
 
@@ -496,9 +496,8 @@ TableDecontaminate = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": decontaminate(
         im["train"].data, im["eval"].data,
-        id_col=self.config.get("id_column", "doc_id"),
-        text_col=self.config.get("text_column", "text"),
-        n=self.config.get("ngram", 5))},
+        **config_kwargs(self, id_col="id_column", text_col="text_column",
+                        n="ngram"))},
     doc="Flag training docs sharing any word n-gram with an eval set; "
         "ngram-hash join, text never shuffles.",
 )
@@ -508,7 +507,7 @@ TableRepetitionStats = _simple_module(
     {"table": TABLE},
     {"table": TABLE},
     lambda self, im, ctx: {"table": repetition_stats(
-        im["table"].data, self.config.get("text_column", "text"))},
+        im["table"].data, **config_kwargs(self, text_col="text_column"))},
     doc="Gopher-style duplicate-line/token fractions; map-only.",
 )
 
@@ -518,9 +517,8 @@ TableTfidfTopTerms = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": tfidf_top_terms(
         im["table"].data,
-        id_col=self.config.get("id_column", "doc_id"),
-        text_col=self.config.get("text_column", "text"),
-        k=self.config.get("k", 5))},
+        **config_kwargs(self, "k", id_col="id_column",
+                        text_col="text_column"))},
     doc="Top-k TF-IDF terms per doc (smoothed idf); two aggregates + "
         "window top-k.",
 )
@@ -531,9 +529,8 @@ TableInvertedIndex = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": inverted_index(
         im["table"].data,
-        id_col=self.config.get("id_column", "doc_id"),
-        text_col=self.config.get("text_column", "text"),
-        min_df=self.config.get("min_df", 1))},
+        **config_kwargs(self, "min_df", id_col="id_column",
+                        text_col="text_column"))},
     doc="Term -> (doc_freq, sorted posting list) inverted index; distinct "
         "(doc, term) explode + one term aggregate.",
 )
@@ -544,10 +541,8 @@ TableBm25Score = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": bm25_score(
         im["table"].data, self.config["query_terms"],
-        id_col=self.config.get("id_column", "doc_id"),
-        text_col=self.config.get("text_column", "text"),
-        k1=self.config.get("k1", 1.2),
-        b=self.config.get("b", 0.75))},
+        **config_kwargs(self, "k1", "b", id_col="id_column",
+                        text_col="text_column"))},
     doc="Okapi BM25 relevance vs a fixed query (config: query_terms, k1, b); "
         "pre-shuffle term filter, text never moves.",
 )
@@ -557,7 +552,7 @@ TableTermFreqHistogram = _simple_module(
     {"table": TABLE},
     {"table": TABLE},
     lambda self, im, ctx: {"table": term_freq_histogram(
-        im["table"].data, text_col=self.config.get("text_column", "text"))},
+        im["table"].data, **config_kwargs(self, text_col="text_column"))},
     doc="Corpus frequency-of-frequencies (Zipf profile); two cascaded "
         "aggregates.",
 )
@@ -628,8 +623,7 @@ TableUrlDedup = _simple_module(
     {"groups": TABLE},
     lambda self, im, ctx: {"groups": url_dup_groups(
         im["table"].data,
-        url_col=self.config.get("url_column", "url"),
-        id_col=self.config.get("id_column", "doc_id"))},
+        **config_kwargs(self, url_col="url_column", id_col="id_column"))},
     doc="URL canonicalization + dedup groups (scheme/www/fragment/"
         "tracking-param/port/case/trailing-slash normalization, min-id "
         "survivor).",
@@ -638,11 +632,8 @@ TableUrlDedup = _simple_module(
 def _dsir_process(self, im: ValueMap, context):
     return {"table": dsir_sample(
         im["table"].data, im["target"].data,
-        id_col=self.config.get("id_column", "doc_id"),
-        text_col=self.config.get("text_column", "text"),
-        buckets=self.config.get("buckets", 256),
-        top_k=self.config.get("top_k", 100),
-        gumbel=self.config.get("gumbel", True))}
+        **config_kwargs(self, "buckets", "top_k", "gumbel", id_col="id_column",
+                        text_col="text_column"))}
 
 
 TableDsirSample = _simple_module(
@@ -658,10 +649,8 @@ TablePerplexityBuckets = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": perplexity_buckets(
         im["table"].data,
-        id_col=self.config.get("id_column", "doc_id"),
-        text_col=self.config.get("text_column", "text"),
-        n_buckets=self.config.get("n_buckets", 3),
-        group_col=self.config.get("group_column"))},
+        **config_kwargs(self, "n_buckets", id_col="id_column",
+                        text_col="text_column", group_col="group_column"))},
     doc="CCNet head/middle/tail perplexity tiles under the corpus's own "
         "unigram LM",
 )

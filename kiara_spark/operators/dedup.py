@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import cut_lineage
-from ..modules import KiaraModule, ModuleCharacteristics
+from ..modules import (DICT, STRING, TABLE, KiaraModule, ModuleCharacteristics,
+                       _simple_module, config_kwargs)
 from ..operations import Operation
 from ..values import ValueMap
 from .text import base_hash32, shingles_col, word_shingles_col
@@ -195,14 +196,6 @@ def minhash_lsh_pairs(
     return pairs
 
 
-def jaccard_similarity(text_a: Column, text_b: Column, k: int = 5) -> Column:
-    """Shingle-set Jaccard = |A ∩ B| / |A ∪ B| via array ops (portable)."""
-    a, b = shingles_col(text_a, k), shingles_col(text_b, k)
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(F.array_union(a, b)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
 def _jaccard_arrays(sh_a: Column, sh_b: Column) -> Column:
     """Jaccard for two DISTINCT-element arrays: |A∪B| = |A|+|B|-|A∩B|, so one
     array_intersect replaces intersect+union — at 22k+ candidate pairs the
@@ -373,26 +366,16 @@ def dedup_paragraphs(
         F.coalesce("n_removed", F.lit(0)).cast("bigint").alias("n_removed"))
 
 
-class DedupParagraphs(KiaraModule):
-    """Corpus-wide exact paragraph dedup: duplicated paragraphs removed
-    from every document, unique paragraphs stitched back in order."""
-
-    _module_type_name = "table.dedup.paragraphs"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": dedup_paragraphs(
-            inputs["table"].data,
-            self.config.get("id_column", "doc_id"),
-            self.config.get("text_column", "text"),
-            self.config.get("min_count", 2),
-            self.config.get("min_chars", 1),
-        )}
+DedupParagraphs = _simple_module(
+    "table.dedup.paragraphs", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": dedup_paragraphs(
+        im["table"].data,
+        **config_kwargs(self, "min_count", "min_chars", id_col="id_column",
+                        text_col="text_column"),
+    )},
+    doc="""Corpus-wide exact paragraph dedup: duplicated paragraphs removed
+    from every document, unique paragraphs stitched back in order.""",
+)
 
 
 def ngram_jaccard_pairs_lsh(
@@ -980,50 +963,34 @@ class DedupMinhashIncremental(KiaraModule):
         if self.config.get("index_path"):
             corpus_bands = minhash_index_load(
                 context.spark, self.config["index_path"],
-                self.config.get("id_column", "doc_id"),
-                self.config.get("num_hashes", 16),
-                self.config.get("bands", 4),
-                self.config.get("shingle_k", 5),
-                self.config.get("shingle_unit", "char"),
-                text_col=self.config.get("text_column", "text"))
+                **config_kwargs(self, "num_hashes", "bands", "shingle_k",
+                                "shingle_unit", id_col="id_column",
+                                text_col="text_column"))
         return {"table": minhash_dedup_incremental(
             inputs["batch"].data,
             inputs["corpus"].data,
-            self.config.get("id_column", "doc_id"),
-            self.config.get("text_column", "text"),
-            self.config.get("threshold", 0.7),
-            self.config.get("num_hashes", 16),
-            self.config.get("bands", 4),
-            self.config.get("shingle_k", 5),
-            self.config.get("shingle_unit", "char"),
             corpus_bands=corpus_bands,
+            **config_kwargs(self, "threshold", "num_hashes", "bands",
+                            "shingle_k", "shingle_unit", id_col="id_column",
+                            text_col="text_column"),
         )}
 
 
-class DedupMinhashIndexBuild(KiaraModule):
-    """Build + persist the corpus minhash band index for indexed
-    incremental dedup (see minhash_index_build)."""
-
-    _module_type_name = "table.dedup.minhash_index.build"
-    _characteristics = ModuleCharacteristics(is_idempotent=False)
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}, "path": {"type": "string"}}
-
-    def create_outputs_schema(self):
-        return {"index_info": {"type": "dict"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"index_info": minhash_index_build(
-            inputs["table"].data,
-            inputs["path"].data,
-            self.config.get("id_column", "doc_id"),
-            self.config.get("text_column", "text"),
-            self.config.get("num_hashes", 16),
-            self.config.get("bands", 4),
-            self.config.get("shingle_k", 5),
-            self.config.get("shingle_unit", "char"),
-        )}
+DedupMinhashIndexBuild = _simple_module(
+    "table.dedup.minhash_index.build",
+    {"table": TABLE, "path": STRING},
+    {"index_info": DICT},
+    lambda self, im, ctx: {"index_info": minhash_index_build(
+        im["table"].data,
+        im["path"].data,
+        **config_kwargs(self, "num_hashes", "bands", "shingle_k",
+                        "shingle_unit", id_col="id_column",
+                        text_col="text_column"),
+    )},
+    doc="""Build + persist the corpus minhash band index for indexed
+    incremental dedup (see minhash_index_build).""",
+    characteristics=ModuleCharacteristics(is_idempotent=False),
+)
 
 
 def duplicate_ngram_spans(
@@ -1164,24 +1131,14 @@ def ngram_novelty(
     )
 
 
-class DedupNgramNovelty(KiaraModule):
-    """Per-document corpus n-gram novelty score (templating detector)."""
-
-    _module_type_name = "table.dedup.ngram_novelty"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": ngram_novelty(
-            inputs["table"].data,
-            self.config.get("id_column", "doc_id"),
-            self.config.get("text_column", "text"),
-            self.config.get("n", 5),
-        )}
+DedupNgramNovelty = _simple_module(
+    "table.dedup.ngram_novelty", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": ngram_novelty(
+        im["table"].data,
+        **config_kwargs(self, "n", id_col="id_column", text_col="text_column"),
+    )},
+    doc="Per-document corpus n-gram novelty score (templating detector).",
+)
 
 
 def clip_duplicate_spans(
@@ -1222,184 +1179,91 @@ def clip_duplicate_spans(
         (F.size("_t") - F.size(kept)).cast("bigint").alias("n_tokens_removed"))
 
 
-class DedupClipSpans(KiaraModule):
-    """Clip corpus-duplicated n-gram spans out of each document's text."""
+DedupClipSpans = _simple_module(
+    "table.dedup.clip_spans", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": clip_duplicate_spans(
+        im["table"].data,
+        **config_kwargs(self, "n", "min_count", id_col="id_column",
+                        text_col="text_column"),
+    )},
+    doc="Clip corpus-duplicated n-gram spans out of each document's text.",
+)
 
-    _module_type_name = "table.dedup.clip_spans"
+DedupDuplicateNgramSpans = _simple_module(
+    "table.dedup.ngram_spans", {"table": TABLE}, {"spans": TABLE},
+    lambda self, im, ctx: {"spans": duplicate_ngram_spans(
+        im["table"].data,
+        **config_kwargs(self, "n", "min_count", id_col="id_column",
+                        text_col="text_column"),
+    )},
+    doc="""Corpus-wide duplicated word-n-gram spans per document (exact
+    substring dedup primitive).""",
+)
 
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
+DedupExact = _simple_module(
+    "table.dedup.exact", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": exact_dedup(
+        im["table"].data,
+        **config_kwargs(self, id_col="id_column", text_col="text_column"))},
+)
 
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
+DedupMinhash = _simple_module(
+    "table.dedup.minhash", {"table": TABLE}, {"pairs": TABLE},
+    lambda self, im, ctx: {"pairs": minhash_dedup_verified(
+        im["table"].data,
+        **config_kwargs(self, "threshold", "num_hashes", "bands", "shingle_k",
+                        id_col="id_column", text_col="text_column"),
+    )},
+)
 
-    def process(self, inputs: ValueMap, context):
-        return {"table": clip_duplicate_spans(
-            inputs["table"].data,
-            self.config.get("id_column", "doc_id"),
-            self.config.get("text_column", "text"),
-            self.config.get("n", 10),
-            self.config.get("min_count", 2),
-        )}
+DedupSimhash = _simple_module(
+    "table.dedup.simhash", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": with_simhash(
+        im["table"].data,
+        **config_kwargs(self, "shingle_k", text_col="text_column"))},
+)
 
+DedupNgramJaccard = _simple_module(
+    "table.dedup.ngram_jaccard", {"table": TABLE}, {"pairs": TABLE},
+    lambda self, im, ctx: {"pairs": ngram_jaccard_pairs(
+        im["table"].data,
+        # hash_shingles is the exactness escape hatch: hashed 48-bit
+        # shingles are collision-sensitive (~1e-6); callers that need
+        # string-exact Jaccard can disable hashing per-operation
+        **config_kwargs(self, "threshold", "hash_shingles", "max_block_size",
+                        id_col="id_column", text_col="text_column",
+                        k="shingle_k", block_col="block_column"),
+    )},
+)
 
-class DedupDuplicateNgramSpans(KiaraModule):
-    """Corpus-wide duplicated word-n-gram spans per document (exact
-    substring dedup primitive)."""
+DedupNgramContainment = _simple_module(
+    "table.dedup.ngram_containment", {"table": TABLE}, {"pairs": TABLE},
+    lambda self, im, ctx: {"pairs": ngram_containment_pairs(
+        im["table"].data,
+        **config_kwargs(self, "threshold", "num_hashes", "bands",
+                        id_col="id_column", text_col="text_column",
+                        k="shingle_k"),
+    )},
+    doc="Asymmetric containment near-dup pairs (see ngram_containment_pairs).",
+)
 
-    _module_type_name = "table.dedup.ngram_spans"
+DedupFuzzyLevenshtein = _simple_module(
+    "table.dedup.fuzzy_levenshtein", {"table": TABLE}, {"pairs": TABLE},
+    lambda self, im, ctx: {"pairs": fuzzy_levenshtein_pairs(
+        im["table"].data,
+        **config_kwargs(self, "max_distance", id_col="id_column",
+                        text_col="text_column", block_col="block_column"),
+    )},
+)
 
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"spans": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"spans": duplicate_ngram_spans(
-            inputs["table"].data,
-            self.config.get("id_column", "doc_id"),
-            self.config.get("text_column", "text"),
-            self.config.get("n", 10),
-            self.config.get("min_count", 2),
-        )}
-
-
-class DedupExact(KiaraModule):
-    _module_type_name = "table.dedup.exact"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": exact_dedup(inputs["table"].data,
-                                     self.config.get("id_column", "doc_id"),
-                                     self.config.get("text_column", "text"))}
-
-
-class DedupMinhash(KiaraModule):
-    _module_type_name = "table.dedup.minhash"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"pairs": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"pairs": minhash_dedup_verified(
-            inputs["table"].data,
-            self.config.get("id_column", "doc_id"),
-            self.config.get("text_column", "text"),
-            self.config.get("threshold", 0.7),
-            self.config.get("num_hashes", 16),
-            self.config.get("bands", 4),
-            self.config.get("shingle_k", 5),
-        )}
-
-
-class DedupSimhash(KiaraModule):
-    _module_type_name = "table.dedup.simhash"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": with_simhash(inputs["table"].data,
-                                      self.config.get("text_column", "text"),
-                                      self.config.get("shingle_k", 5))}
-
-
-class DedupNgramJaccard(KiaraModule):
-    _module_type_name = "table.dedup.ngram_jaccard"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"pairs": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"pairs": ngram_jaccard_pairs(
-            inputs["table"].data,
-            self.config.get("id_column", "doc_id"),
-            self.config.get("text_column", "text"),
-            self.config.get("threshold", 0.5),
-            self.config.get("shingle_k", 5),
-            self.config.get("block_column"),
-            # exactness escape hatch: hashed 48-bit shingles are collision-
-            # sensitive (~1e-6); callers that need string-exact Jaccard can
-            # disable hashing per-operation
-            self.config.get("hash_shingles", True),
-            self.config.get("max_block_size"),
-        )}
-
-
-class DedupNgramContainment(KiaraModule):
-    """Asymmetric containment near-dup pairs (see ngram_containment_pairs)."""
-
-    _module_type_name = "table.dedup.ngram_containment"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"pairs": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"pairs": ngram_containment_pairs(
-            inputs["table"].data,
-            self.config.get("id_column", "doc_id"),
-            self.config.get("text_column", "text"),
-            self.config.get("threshold", 0.8),
-            self.config.get("shingle_k", 5),
-            self.config.get("num_hashes", 16),
-            self.config.get("bands", 4),
-        )}
-
-
-class DedupFuzzyLevenshtein(KiaraModule):
-    _module_type_name = "table.dedup.fuzzy_levenshtein"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"pairs": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"pairs": fuzzy_levenshtein_pairs(
-            inputs["table"].data,
-            self.config.get("id_column", "doc_id"),
-            self.config.get("text_column", "text"),
-            self.config.get("block_column"),
-            self.config.get("max_distance", 10),
-        )}
-
-
-class DedupJaroWinkler(KiaraModule):
-    _module_type_name = "table.dedup.jaro_winkler"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"pairs": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"pairs": jaro_winkler_pairs(
-            inputs["table"].data,
-            self.config.get("id_column", "doc_id"),
-            self.config.get("text_column", "text"),
-            self.config.get("block_column"),
-            self.config.get("threshold", 0.9),
-        )}
+DedupJaroWinkler = _simple_module(
+    "table.dedup.jaro_winkler", {"table": TABLE}, {"pairs": TABLE},
+    lambda self, im, ctx: {"pairs": jaro_winkler_pairs(
+        im["table"].data,
+        **config_kwargs(self, "threshold", id_col="id_column",
+                        text_col="text_column", block_col="block_column"),
+    )},
+)
 
 
 MODULES = [DedupExact, DedupMinhash, DedupSimhash, DedupNgramJaccard,
@@ -1503,26 +1367,17 @@ def fellegi_sunter_patterns(
                     F.round(post, 6).alias("p_match"))
 
 
-class DedupFellegiSunter(KiaraModule):
-    """Fellegi-Sunter agreement-pattern match weights (see
-    fellegi_sunter_patterns)."""
-
-    _module_type_name = "table.linkage.fellegi_sunter"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": fellegi_sunter_patterns(
-            inputs["table"].data,
-            self.config["id_column"],
-            self.config["block_column"],
-            self.config["field_columns"],
-            m_probs=self.config.get("m_probs"),
-            prior=self.config.get("prior", 0.05))}
+DedupFellegiSunter = _simple_module(
+    "table.linkage.fellegi_sunter", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": fellegi_sunter_patterns(
+        im["table"].data,
+        self.config["id_column"],
+        self.config["block_column"],
+        self.config["field_columns"],
+        **config_kwargs(self, "m_probs", "prior"))},
+    doc="""Fellegi-Sunter agreement-pattern match weights (see
+    fellegi_sunter_patterns).""",
+)
 
 
 MODULES.append(DedupFellegiSunter)

@@ -38,8 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operations import Operation
-from ..values import ValueMap
-from .tables import TABLE, _simple_module
+from ..modules import TABLE, _simple_module, config_kwargs
 
 
 def debounce_events(
@@ -424,9 +423,8 @@ EventsDebounce = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": debounce_events(
         im["table"].data, self.config["keys"],
-        ts_col=self.config.get("ts_column", "ts"),
-        min_gap_seconds=self.config.get("min_gap_seconds", 60),
-        tiebreak_col=self.config.get("tiebreak_column", "event_id"))},
+        **config_kwargs(self, "min_gap_seconds", ts_col="ts_column",
+                        tiebreak_col="tiebreak_column"))},
     doc="Near-time duplicate drop (lag-debounce; config: keys, "
         "min_gap_seconds, ts_column); one key shuffle.",
 )
@@ -437,8 +435,7 @@ EventsCumulativeDistinct = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": cumulative_distinct_daily(
         im["table"].data,
-        id_col=self.config.get("id_column", "user_id"),
-        ts_col=self.config.get("ts_column", "ts"))},
+        **config_kwargs(self, id_col="id_column", ts_col="ts_column"))},
     doc="Daily new + running distinct entities via first-seen reduction "
         "(config: id_column, ts_column); O(days) window state.",
 )
@@ -449,11 +446,9 @@ EventsResampleOhlc = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": resample_ohlc(
         im["table"].data,
-        key_col=self.config.get("key_column", "event_type"),
-        ts_col=self.config.get("ts_column", "ts"),
-        value_col=self.config.get("value_column", "value"),
-        bucket=self.config.get("bucket", "1 hour"),
-        tiebreak_col=self.config.get("tiebreak_column", "event_id"))},
+        **config_kwargs(self, "bucket", key_col="key_column",
+                        ts_col="ts_column", value_col="value_column",
+                        tiebreak_col="tiebreak_column"))},
     doc="OHLC/volume downsample bars per key+bucket (min_by/max_by, one "
         "hash aggregate).",
 )
@@ -464,12 +459,10 @@ EventsAttribution = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": last_touch_attribution(
         im["table"].data,
-        user_col=self.config.get("user_column", "user_id"),
-        ts_col=self.config.get("ts_column", "ts"),
-        type_col=self.config.get("type_column", "event_type"),
-        conversion_type=self.config.get("conversion_type", "purchase"),
-        touch_types=self.config.get("touch_types"),
-        tiebreak_col=self.config.get("tiebreak_column", "event_id"))},
+        **config_kwargs(self, "conversion_type", "touch_types",
+                        user_col="user_column", ts_col="ts_column",
+                        type_col="type_column",
+                        tiebreak_col="tiebreak_column"))},
     doc="Last-touch conversion attribution via backward as-of join "
         "(config: conversion_type, touch_types).",
 )
@@ -491,11 +484,8 @@ EventsEwma = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": ewma_truncated(
         im["table"].data,
-        key_col=self.config.get("key_column", "event_type"),
-        ts_col=self.config.get("ts_column", "ts"),
-        value_col=self.config.get("value_column", "value"),
-        alpha=self.config.get("alpha", 0.3),
-        horizon=self.config.get("horizon", 8))},
+        **config_kwargs(self, "alpha", "horizon", key_col="key_column",
+                        ts_col="ts_column", value_col="value_column"))},
     doc="Truncated-horizon EWMA over the daily-resampled series (config: "
         "alpha, horizon); fixed lag battery over one window.",
 )
@@ -506,12 +496,9 @@ EventsPathNgrams = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": event_path_ngrams(
         im["table"].data,
-        user_col=self.config.get("user_column", "user_id"),
-        ts_col=self.config.get("ts_column", "ts"),
-        type_col=self.config.get("type_column", "event_type"),
-        n=self.config.get("n", 3),
-        top_k=self.config.get("top_k", 20),
-        tiebreak_col=self.config.get("tiebreak_column", "event_id"))},
+        **config_kwargs(self, "n", "top_k", user_col="user_column",
+                        ts_col="ts_column", type_col="type_column",
+                        tiebreak_col="tiebreak_column"))},
     doc="Top-k consecutive event-type n-gram paths per user (config: n, "
         "top_k); lead battery + one path aggregate.",
 )
@@ -522,10 +509,8 @@ EventsCappedBalance = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": capped_running_balance(
         im["table"].data,
-        key_col=self.config.get("key_column", "event_type"),
-        ts_col=self.config.get("ts_column", "ts"),
-        delta_col=self.config.get("delta_column", "delta"),
-        floor_value=self.config.get("floor", 0.0))},
+        **config_kwargs(self, key_col="key_column", ts_col="ts_column",
+                        delta_col="delta_column", floor_value="floor"))},
     doc="Floored running balance (inventory semantics) — the non-linear "
         "recurrence a window cumsum can't express; per-key applyInPandas "
         "fold.",
@@ -1290,8 +1275,7 @@ EventsChangepointBinseg = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": changepoint_binseg(
         im["table"].data,
-        ts_col=self.config.get("ts_column", "ts"),
-        bucket=self.config.get("bucket", "day"))},
+        **config_kwargs(self, "bucket", ts_col="ts_column"))},
     doc="single change-point by binary segmentation over the bucketed "
         "count series (exact-integer inputs, deterministic argmax)",
 )
@@ -1303,10 +1287,8 @@ EventsPositionAttribution = _simple_module(
     lambda self, im, ctx: {"table": position_based_attribution(
         im["table"].data,
         touch_types=self.config["touch_types"],
-        conversion_type=self.config.get("conversion_type", "purchase"),
-        user_col=self.config.get("user_column", "user_id"),
-        ts_col=self.config.get("ts_column", "ts"),
-        type_col=self.config.get("type_column", "event_type"))},
+        **config_kwargs(self, "conversion_type", user_col="user_column",
+                        ts_col="ts_column", type_col="type_column"))},
     doc="U-shaped 40/20/40 multi-touch attribution (decimal-exact "
         "credit sums)",
 )
@@ -1317,10 +1299,8 @@ EventsMarkovStationary = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": markov_stationary(
         im["table"].data,
-        user_col=self.config.get("user_column", "user_id"),
-        ts_col=self.config.get("ts_column", "ts"),
-        type_col=self.config.get("type_column", "event_type"),
-        iterations=self.config.get("iterations", 3))},
+        **config_kwargs(self, "iterations", user_col="user_column",
+                        ts_col="ts_column", type_col="type_column"))},
     doc="stationary distribution of the behavioral Markov chain "
         "(decimal-exact power iteration)",
 )
@@ -1343,10 +1323,8 @@ EventsRfmSegments = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": rfm_segments(
         im["table"].data,
-        user_col=self.config.get("user_column", "user_id"),
-        ts_col=self.config.get("ts_column", "ts"),
-        value_col=self.config.get("value_column", "value"),
-        n_bins=self.config.get("n_bins", 5))},
+        **config_kwargs(self, "n_bins", user_col="user_column",
+                        ts_col="ts_column", value_col="value_column"))},
     doc="RFM quantile scoring + named segments (one user aggregate + "
         "broadcast percentile bounds)",
 )
@@ -1371,9 +1349,8 @@ EventsFunnel = _simple_module(
     lambda self, im, ctx: {"table": funnel(
         im["table"].data,
         steps=self.config["steps"],
-        user_col=self.config.get("user_column", "user_id"),
-        ts_col=self.config.get("ts_column", "ts"),
-        type_col=self.config.get("type_column", "event_type"))},
+        **config_kwargs(self, user_col="user_column", ts_col="ts_column",
+                        type_col="type_column"))},
     doc="ordered conversion funnel (strict progression, one shuffle)",
 )
 
@@ -1383,8 +1360,7 @@ EventsCohortRetention = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": cohort_retention(
         im["table"].data,
-        user_col=self.config.get("user_column", "user_id"),
-        ts_col=self.config.get("ts_column", "ts"))},
+        **config_kwargs(self, user_col="user_column", ts_col="ts_column"))},
     doc="weekly cohort retention matrix (one raw-log pass)",
 )
 
@@ -1395,8 +1371,7 @@ EventsAutocorrelation = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": autocorrelation(
         im["table"].data,
-        ts_col=self.config.get("ts_column", "ts"),
-        max_lag=self.config.get("max_lag", 12))},
+        **config_kwargs(self, "max_lag", ts_col="ts_column"))},
     doc="ACF of the hourly count series via exact bigint algebra "
         "(one raw-data pass, tiny series joins).",
 )
@@ -1407,9 +1382,7 @@ EventsSeasonalDecompose = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": seasonal_decompose(
         im["table"].data,
-        ts_col=self.config.get("ts_column", "ts"),
-        period=self.config.get("period", 24),
-        window=self.config.get("window", 24))},
+        **config_kwargs(self, "period", "window", ts_col="ts_column"))},
     doc="Additive trend/seasonal/residual decomposition of an hourly "
         "count series (centered moving average + per-phase means).",
 )
@@ -1428,11 +1401,8 @@ EventsHoltForecast = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": holt_linear_forecast(
         im["table"].data,
-        ts_col=self.config.get("ts_column", "ts"),
-        value_col=self.config.get("value_column", "value"),
-        alpha=self.config.get("alpha", 0.5),
-        beta=self.config.get("beta", 0.3),
-        horizon=self.config.get("horizon", 7))},
+        **config_kwargs(self, "alpha", "beta", "horizon", ts_col="ts_column",
+                        value_col="value_column"))},
     doc="Holt double exponential smoothing forecast (daily aggregate + "
         "in-plan array-fold recursion)",
 )
@@ -1443,9 +1413,8 @@ EventsSequencePattern = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": sequence_pattern(
         im["table"].data, self.config["pattern"],
-        user_col=self.config.get("user_column", "user_id"),
-        ts_col=self.config.get("ts_column", "ts"),
-        type_col=self.config.get("type_column", "event_type"))},
+        **config_kwargs(self, user_col="user_column", ts_col="ts_column",
+                        type_col="type_column"))},
     doc="MATCH_RECOGNIZE-lite regex matching over per-key ordered "
         "event sequences",
 )
@@ -1456,9 +1425,8 @@ EventsDftPeriodogram = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": dft_periodogram(
         im["table"].data,
-        ts_col=self.config.get("ts_column", "ts"),
-        min_period=self.config.get("min_period", 2),
-        max_period=self.config.get("max_period", 14))},
+        **config_kwargs(self, "min_period", "max_period",
+                        ts_col="ts_column"))},
     doc="Goertzel-style DFT power at candidate day periods (cycle "
         "detection over the daily count series)",
 )
@@ -1470,9 +1438,8 @@ EventsCrossCorrelation = _simple_module(
     lambda self, im, ctx: {"table": cross_correlation(
         im["table"].data,
         self.config["type_a"], self.config["type_b"],
-        ts_col=self.config.get("ts_column", "ts"),
-        type_col=self.config.get("type_column", "event_type"),
-        max_lag=self.config.get("max_lag", 3))},
+        **config_kwargs(self, "max_lag", ts_col="ts_column",
+                        type_col="type_column"))},
     doc="lagged Pearson cross-correlation between two event types' "
         "daily series (lead/lag detection)",
 )
@@ -1483,9 +1450,8 @@ EventsActiveUsers = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": active_users(
         im["table"].data,
-        ts_col=self.config.get("ts_column", "ts"),
-        user_col=self.config.get("user_column", "user_id"),
-        windows=tuple(self.config.get("windows", (1, 7, 30))))},
+        **config_kwargs(self, "windows", ts_col="ts_column",
+                        user_col="user_column"))},
     doc="DAU/WAU/MAU trailing-window distinct actives via user-day "
         "fan-out (never COUNT(DISTINCT) OVER RANGE)",
 )
@@ -1974,9 +1940,7 @@ EventsSprtMonitor = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": sprt_monitor(
         im["table"].data, self.config["p0"], self.config["p1"],
-        alpha=self.config.get("alpha", 0.05),
-        beta=self.config.get("beta", 0.2),
-        conversion_type=self.config.get("conversion_type", "purchase"))},
+        **config_kwargs(self, "alpha", "beta", "conversion_type"))},
     doc="Wald SPRT daily experiment monitor: cumulative conversion LLR "
         "vs ln boundaries (valid daily peeking).",
 )
@@ -1987,9 +1951,8 @@ EventsPageHinkley = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": page_hinkley(
         im["table"].data,
-        value_col=self.config.get("value_column", "value"),
-        delta=self.config.get("delta", 0.1),
-        threshold=self.config.get("threshold", 5.0))},
+        **config_kwargs(self, "delta", "threshold",
+                        value_col="value_column"))},
     doc="Page-Hinkley sequential mean-drift detector over daily means.",
 )
 
@@ -2022,9 +1985,8 @@ EventsDurbinWatson = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": durbin_watson(
         im["table"].data,
-        ts_col=self.config.get("ts_column", "ts"),
-        value_col=self.config.get("value_column"),
-        bucket=self.config.get("bucket", "day"))},
+        **config_kwargs(self, "bucket", ts_col="ts_column",
+                        value_col="value_column"))},
     doc="Durbin-Watson residual-autocorrelation diagnostic of the "
         "detrended bucketed series.",
 )
@@ -2035,9 +1997,8 @@ EventsMannKendall = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": mann_kendall_trend(
         im["table"].data,
-        ts_col=self.config.get("ts_column", "ts"),
-        value_col=self.config.get("value_column"),
-        bucket=self.config.get("bucket", "day"))},
+        **config_kwargs(self, "bucket", ts_col="ts_column",
+                        value_col="value_column"))},
     doc="Mann-Kendall monotonic-trend test + Sen's robust slope over "
         "the bucketed series (exact pairwise signs on the bounded grid).",
 )
@@ -2154,9 +2115,8 @@ EventsShapleyAttribution = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": shapley_attribution(
         im["table"].data, self.config["channels"],
-        user_col=self.config.get("user_column", "user_id"),
-        type_col=self.config.get("type_column", "event_type"),
-        conversion_type=self.config.get("conversion_type", "purchase"))},
+        **config_kwargs(self, "conversion_type", user_col="user_column",
+                        type_col="type_column"))},
     doc="Shapley-value channel attribution over exact touched-channel "
         "subsets (Zhao et al. 2018): average marginal conversion-rate "
         "contribution per channel; efficiency holds by construction.",

@@ -20,9 +20,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..modules import KiaraModule, ModuleCharacteristics
+from ..modules import (DICT, STRING, TABLE, ModuleCharacteristics,
+                       _simple_module, config_kwargs)
 from ..operations import Operation
-from ..values import ValueMap
 
 
 @dataclass(frozen=True)
@@ -154,164 +154,126 @@ def bundle_to_text_table(df: DataFrame, encoding: str = "utf-8") -> DataFrame:
     )
 
 
-class ImportLocalFile(KiaraModule):
-    """Reference filesystem.py:28-55 (non-idempotent: external-world read)."""
+ImportLocalFile = _simple_module(
+    "import.local.file", {"path": STRING}, {"file": {"type": "file"}},
+    lambda self, im, ctx: {"file": KiaraFile.from_path(im["path"].data)},
+    doc="Reference filesystem.py:28-55 (non-idempotent: external-world read).",
+    characteristics=ModuleCharacteristics(is_idempotent=False, is_source=True),
+)
 
-    _module_type_name = "import.local.file"
-    _characteristics = ModuleCharacteristics(is_idempotent=False, is_source=True)
-
-    def create_inputs_schema(self):
-        return {"path": {"type": "string"}}
-
-    def create_outputs_schema(self):
-        return {"file": {"type": "file"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"file": KiaraFile.from_path(inputs["path"].data)}
-
-
-class ImportLocalFileBundle(KiaraModule):
-    """Reference filesystem.py:136-179."""
-
-    _module_type_name = "import.local.file_bundle"
-    _characteristics = ModuleCharacteristics(is_idempotent=False, is_source=True)
-
-    def create_inputs_schema(self):
-        return {"path": {"type": "string"}}
-
-    def create_outputs_schema(self):
-        return {"file_bundle": {"type": "file_bundle"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {
-            "file_bundle": import_file_bundle(
-                context.spark,
-                inputs["path"].data,
-                self.config.get("include_file_types"),
-                self.config.get("exclude_file_types"),
-            )
-        }
+ImportLocalFileBundle = _simple_module(
+    "import.local.file_bundle",
+    {"path": STRING},
+    {"file_bundle": {"type": "file_bundle"}},
+    lambda self, im, ctx: {
+        "file_bundle": import_file_bundle(
+            ctx.spark,
+            im["path"].data,
+            **config_kwargs(self, "include_file_types", "exclude_file_types"),
+        )
+    },
+    doc="Reference filesystem.py:136-179.",
+    characteristics=ModuleCharacteristics(is_idempotent=False, is_source=True),
+)
 
 
-class CreateFileFromBytes(KiaraModule):
-    """Reference filesystem.py:58-84."""
-
-    _module_type_name = "create.file.from.bytes"
-    _characteristics = ModuleCharacteristics(is_idempotent=False)
-
-    def create_inputs_schema(self):
-        return {"bytes": {"type": "bytes"}, "file_name": {"type": "string"}}
-
-    def create_outputs_schema(self):
-        return {"file": {"type": "file"}}
-
-    def process(self, inputs: ValueMap, context):
-        target = os.path.join(context.base_path, "files", inputs["file_name"].data)
-        os.makedirs(os.path.dirname(target), exist_ok=True)
-        with open(target, "wb") as f:
-            f.write(inputs["bytes"].data)
-        return {"file": KiaraFile.from_path(target)}
+def _create_file_from_bytes_process(self, im, ctx):
+    target = os.path.join(ctx.base_path, "files", im["file_name"].data)
+    os.makedirs(os.path.dirname(target), exist_ok=True)
+    with open(target, "wb") as f:
+        f.write(im["bytes"].data)
+    return {"file": KiaraFile.from_path(target)}
 
 
-class FileBundlePickFile(KiaraModule):
-    """Reference filesystem.py:271-300 — select one file by rel path."""
+CreateFileFromBytes = _simple_module(
+    "create.file.from.bytes",
+    {"bytes": {"type": "bytes"}, "file_name": STRING},
+    {"file": {"type": "file"}},
+    _create_file_from_bytes_process,
+    doc="Reference filesystem.py:58-84.",
+    characteristics=ModuleCharacteristics(is_idempotent=False),
+)
 
-    _module_type_name = "file_bundle.pick.file"
-
-    def create_inputs_schema(self):
-        return {"file_bundle": {"type": "file_bundle"}, "path": {"type": "string"}}
-
-    def create_outputs_schema(self):
-        return {"file": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {
-            "file": inputs["file_bundle"].data.filter(
-                F.col("rel_path") == F.lit(inputs["path"].data)
-            )
-        }
-
-
-class FileBundlePickSubFolder(KiaraModule):
-    """Reference filesystem.py:303-345 — prefix-filter into a sub-bundle."""
-
-    _module_type_name = "file_bundle.pick.sub_folder"
-
-    def create_inputs_schema(self):
-        return {"file_bundle": {"type": "file_bundle"}, "sub_path": {"type": "string"}}
-
-    def create_outputs_schema(self):
-        return {"file_bundle": {"type": "file_bundle"}}
-
-    def process(self, inputs: ValueMap, context):
-        sub = inputs["sub_path"].data.rstrip("/") + "/"
-        return {
-            "file_bundle": inputs["file_bundle"].data.filter(
-                F.col("rel_path").startswith(sub)
-            )
-        }
+FileBundlePickFile = _simple_module(
+    "file_bundle.pick.file",
+    {"file_bundle": {"type": "file_bundle"}, "path": STRING},
+    {"file": TABLE},
+    lambda self, im, ctx: {
+        "file": im["file_bundle"].data.filter(
+            F.col("rel_path") == F.lit(im["path"].data)
+        )
+    },
+    doc="Reference filesystem.py:271-300 — select one file by rel path.",
+)
 
 
-class FileBundleToTextTable(KiaraModule):
-    """Bundle -> text table (the tabular-plugin 'create.table.from.file_bundle' role)."""
-
-    _module_type_name = "create.table.from.file_bundle"
-
-    def create_inputs_schema(self):
-        return {"file_bundle": {"type": "file_bundle"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": bundle_to_text_table(inputs["file_bundle"].data,
-                                              self.config.get("encoding", "utf-8"))}
+def _file_bundle_pick_sub_folder_process(self, im, ctx):
+    sub = im["sub_path"].data.rstrip("/") + "/"
+    return {
+        "file_bundle": im["file_bundle"].data.filter(
+            F.col("rel_path").startswith(sub)
+        )
+    }
 
 
-class ExportFile(KiaraModule):
-    """Reference export.file (filesystem.py:258-268 + export_as.py base)."""
+FileBundlePickSubFolder = _simple_module(
+    "file_bundle.pick.sub_folder",
+    {"file_bundle": {"type": "file_bundle"}, "sub_path": STRING},
+    {"file_bundle": {"type": "file_bundle"}},
+    _file_bundle_pick_sub_folder_process,
+    doc="Reference filesystem.py:303-345 — prefix-filter into a sub-bundle.",
+)
 
-    _module_type_name = "export.file"
-    _characteristics = ModuleCharacteristics(is_idempotent=False)
-
-    def create_inputs_schema(self):
-        return {"file": {"type": "file"}, "base_path": {"type": "string"},
-                "name": {"type": "string", "optional": True}}
-
-    def create_outputs_schema(self):
-        return {"export_details": {"type": "dict"}}
-
-    def process(self, inputs: ValueMap, context):
-        import shutil
-
-        src: KiaraFile = inputs["file"].data
-        name = inputs["name"].data if "name" in inputs else src.file_name
-        base = inputs["base_path"].data
-        os.makedirs(base, exist_ok=True)
-        target = os.path.join(base, name)
-        shutil.copyfile(src.path, target)
-        return {"export_details": {"path": target, "size": src.size}}
+FileBundleToTextTable = _simple_module(
+    "create.table.from.file_bundle",
+    {"file_bundle": {"type": "file_bundle"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": bundle_to_text_table(
+        im["file_bundle"].data, **config_kwargs(self, "encoding"))},
+    doc="Bundle -> text table (the tabular-plugin 'create.table.from.file_bundle' role).",
+)
 
 
-class ImportIncrementalFiles(KiaraModule):
-    """Batch-incremental ingest: only files unseen by the ledger are read
+def _export_file_process(self, im, ctx):
+    import shutil
+
+    src: KiaraFile = im["file"].data
+    name = im["name"].data if "name" in im else src.file_name
+    base = im["base_path"].data
+    os.makedirs(base, exist_ok=True)
+    target = os.path.join(base, name)
+    shutil.copyfile(src.path, target)
+    return {"export_details": {"path": target, "size": src.size}}
+
+
+ExportFile = _simple_module(
+    "export.file",
+    {"file": {"type": "file"}, "base_path": STRING,
+     "name": {"type": "string", "optional": True}},
+    {"export_details": DICT},
+    _export_file_process,
+    doc="Reference export.file (filesystem.py:258-268 + export_as.py base).",
+    characteristics=ModuleCharacteristics(is_idempotent=False),
+)
+
+
+def _import_incremental_files_process(self, im, ctx):
+    df, report = incremental_read(
+        ctx.spark, im["path"].data, im["state_path"].data,
+        **config_kwargs(self, "file_format"))
+    return {"table": df, "report": report}
+
+
+ImportIncrementalFiles = _simple_module(
+    "import.incremental.files",
+    {"path": STRING, "state_path": STRING},
+    {"table": TABLE, "report": DICT},
+    _import_incremental_files_process,
+    doc="""Batch-incremental ingest: only files unseen by the ledger are read
     (see incremental_read).  Non-idempotent by nature — each run advances
-    the ledger."""
-
-    _module_type_name = "import.incremental.files"
-    _characteristics = ModuleCharacteristics(is_idempotent=False, is_source=True)
-
-    def create_inputs_schema(self):
-        return {"path": {"type": "string"}, "state_path": {"type": "string"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}, "report": {"type": "dict"}}
-
-    def process(self, inputs: ValueMap, context):
-        df, report = incremental_read(
-            context.spark, inputs["path"].data, inputs["state_path"].data,
-            file_format=self.config.get("file_format", "parquet"))
-        return {"table": df, "report": report}
+    the ledger.""",
+    characteristics=ModuleCharacteristics(is_idempotent=False, is_source=True),
+)
 
 
 MODULES = [

@@ -29,9 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import cut_lineage
-from ..modules import KiaraModule
+from ..modules import STRING, TABLE, _simple_module, config_kwargs
 from ..operations import Operation
-from ..values import ValueMap
 
 
 def undirected_edges(edges: DataFrame) -> DataFrame:
@@ -1604,134 +1603,81 @@ def condensation_layers(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
             .select("id", "component", "layer"))
 
 
-class GraphCondensationLayers(KiaraModule):
-    """SCC condensation + longest-path topological layers (see
-    condensation_layers)."""
+GraphCondensationLayers = _simple_module(
+    "network_graph.condensation_layers",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": condensation_layers(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "max_rounds"))},
+    doc="""SCC condensation + longest-path topological layers (see
+    condensation_layers).""",
+)
 
-    _module_type_name = "network_graph.condensation_layers"
+GraphRandomWalks = _simple_module(
+    "network_graph.random_walks",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": random_walks(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "walk_length", "walks_per_node"))},
+    doc="""Deterministic DeepWalk-style random-walk corpus (see
+    random_walks).""",
+)
 
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
+GraphBipartiteProject = _simple_module(
+    "network_graph.bipartite_project",
+    {"graph": {"type": "network_graph"}},
+    {"graph": {"type": "network_graph"}},
+    lambda self, im, ctx: {"graph": {"edges": bipartite_project(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "min_weight", "max_right_degree"))}},
+    doc="""Weighted one-mode projection of a bipartite graph (see
+    bipartite_project).""",
+)
 
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
+GraphDegreeAssortativity = _simple_module(
+    "network_graph.degree_assortativity",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": degree_assortativity(
+        im["graph"].data["edges"])},
+    doc="Degree assortativity coefficient (see degree_assortativity).",
+)
 
-    def process(self, inputs: ValueMap, context):
-        return {"table": condensation_layers(
-            inputs["graph"].data["edges"],
-            max_rounds=self.config.get("max_rounds", 100))}
+GraphModularity = _simple_module(
+    "network_graph.modularity",
+    {"graph": {"type": "network_graph"}, "communities": TABLE},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": modularity(
+        im["graph"].data["edges"],
+        im["communities"].data,
+        **config_kwargs(self, id_col="id_column",
+                        comm_col="community_column"))},
+    doc="Newman modularity of a given node partition (see modularity).",
+)
 
+GraphBipartiteButterflies = _simple_module(
+    "network_graph.bipartite_butterflies",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": bipartite_butterflies(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "max_right_degree"))},
+    doc="""Per-node butterfly counts in a bipartite graph (see
+    bipartite_butterflies).""",
+)
 
-class GraphRandomWalks(KiaraModule):
-    """Deterministic DeepWalk-style random-walk corpus (see
-    random_walks)."""
-
-    _module_type_name = "network_graph.random_walks"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": random_walks(
-            inputs["graph"].data["edges"],
-            walk_length=self.config.get("walk_length", 4),
-            walks_per_node=self.config.get("walks_per_node", 2))}
-
-
-class GraphBipartiteProject(KiaraModule):
-    """Weighted one-mode projection of a bipartite graph (see
-    bipartite_project)."""
-
-    _module_type_name = "network_graph.bipartite_project"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"graph": {"edges": bipartite_project(
-            inputs["graph"].data["edges"],
-            min_weight=self.config.get("min_weight", 1),
-            max_right_degree=self.config.get("max_right_degree"))}}
-
-
-class GraphDegreeAssortativity(KiaraModule):
-    """Degree assortativity coefficient (see degree_assortativity)."""
-
-    _module_type_name = "network_graph.degree_assortativity"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": degree_assortativity(
-            inputs["graph"].data["edges"])}
-
-
-class GraphModularity(KiaraModule):
-    """Newman modularity of a given node partition (see modularity)."""
-
-    _module_type_name = "network_graph.modularity"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"},
-                "communities": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": modularity(
-            inputs["graph"].data["edges"],
-            inputs["communities"].data,
-            id_col=self.config.get("id_column", "id"),
-            comm_col=self.config.get("community_column", "community"))}
-
-
-class GraphBipartiteButterflies(KiaraModule):
-    """Per-node butterfly counts in a bipartite graph (see
-    bipartite_butterflies)."""
-
-    _module_type_name = "network_graph.bipartite_butterflies"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": bipartite_butterflies(
-            inputs["graph"].data["edges"],
-            max_right_degree=self.config.get("max_right_degree"))}
-
-
-class GraphWalkSkipgramPairs(KiaraModule):
-    """Skip-gram (center, context) pair counts from the walk corpus (see
-    walk_skipgram_pairs)."""
-
-    _module_type_name = "network_graph.walk_skipgram_pairs"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": walk_skipgram_pairs(
-            inputs["graph"].data["edges"],
-            walk_length=self.config.get("walk_length", 4),
-            walks_per_node=self.config.get("walks_per_node", 2),
-            window=self.config.get("window", 2))}
+GraphWalkSkipgramPairs = _simple_module(
+    "network_graph.walk_skipgram_pairs",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": walk_skipgram_pairs(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "walk_length", "walks_per_node", "window"))},
+    doc="""Skip-gram (center, context) pair counts from the walk corpus (see
+    walk_skipgram_pairs).""",
+)
 
 
 # -- database namespace ops -------------------------------------------------
@@ -1769,352 +1715,220 @@ def database_query(db: dict[str, DataFrame], query: str) -> DataFrame:
 # -- modules ----------------------------------------------------------------
 
 
-class CreateDatabaseFromFolder(KiaraModule):
-    _module_type_name = "create.database.from.folder"
-
-    def create_inputs_schema(self):
-        return {"path": {"type": "string"}}
-
-    def create_outputs_schema(self):
-        return {"database": {"type": "database"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"database": database_from_folder(context.spark, inputs["path"].data)}
-
-
-class DatabaseQuery(KiaraModule):
-    _module_type_name = "database.query.sql"
-
-    def create_inputs_schema(self):
-        return {"database": {"type": "database"}, "query": {"type": "string"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": database_query(inputs["database"].data,
-                                        inputs["query"].data)}
-
-
-class DatabasePickTable(KiaraModule):
-    _module_type_name = "database.pick.table"
-
-    def create_inputs_schema(self):
-        return {"database": {"type": "database"}, "table_name": {"type": "string"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        db = inputs["database"].data
-        name = inputs["table_name"].data
-        if name not in db:
-            raise KeyError(f"no table {name!r} in database; has {sorted(db)}")
-        return {"table": db[name]}
-
-
-class CreateGraphFromTables(KiaraModule):
-    _module_type_name = "create.network_graph.from.tables"
-
-    def create_inputs_schema(self):
-        return {"edges": {"type": "table"},
-                "nodes": {"type": "table", "optional": True}}
-
-    def create_outputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def process(self, inputs: ValueMap, context):
-        src = self.config.get("source_column", "src")
-        dst = self.config.get("target_column", "dst")
-        edges = inputs["edges"].data.withColumnsRenamed({src: "src", dst: "dst"})
-        graph = {"edges": edges}
-        if "nodes" in inputs:
-            graph["nodes"] = inputs["nodes"].data
-        return {"graph": graph}
-
-
-class GraphDegrees(KiaraModule):
-    _module_type_name = "network_graph.degrees"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": degrees(inputs["graph"].data["edges"],
-                                 directed=self.config.get("directed", False))}
-
-
-class GraphTwoHopApprox(KiaraModule):
-    """Sketch-based 2-hop neighborhood size (see
-    neighbors_within_2_hops_approx) — constant memory per node."""
-
-    _module_type_name = "network_graph.two_hop_approx"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": neighbors_within_2_hops_approx(
-            inputs["graph"].data["edges"],
-            rsd=self.config.get("rsd", 0.05))}
-
-
-class GraphComponents(KiaraModule):
-    _module_type_name = "network_graph.connected_components"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": connected_components(
-            inputs["graph"].data["edges"],
-            max_iterations=self.config.get("max_iterations", 20),
-            driver_threshold=self.config.get("driver_threshold", 100_000),
-            algorithm=self.config.get("algorithm", "hash_min"))}
-
-
-class GraphSCC(KiaraModule):
-    """Strongly connected components of a directed graph (min-id label;
-    see strongly_connected_components)."""
-
-    _module_type_name = "network_graph.strongly_connected_components"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": strongly_connected_components(
-            inputs["graph"].data["edges"],
-            max_peel_rounds=self.config.get("max_peel_rounds", 20),
-            propagate_rounds=self.config.get("propagate_rounds", 20),
-            driver_threshold=self.config.get("driver_threshold", 100_000))}
-
-
-class GraphLabelPropagation(KiaraModule):
-    _module_type_name = "network_graph.label_propagation"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": label_propagation(
-            inputs["graph"].data["edges"],
-            iterations=self.config.get("iterations", 2))}
-
-
-class GraphPagerank(KiaraModule):
-    _module_type_name = "network_graph.pagerank"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": pagerank(
-            inputs["graph"].data["edges"],
-            iterations=self.config.get("iterations", 3),
-            damping=self.config.get("damping", 0.85))}
-
-
-class GraphBfsHops(KiaraModule):
-    """Multi-source BFS distances (capped): frontier-only expansion."""
-
-    _module_type_name = "network_graph.bfs_hops"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}, "sources": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": bfs_hops(
-            inputs["graph"].data["edges"],
-            inputs["sources"].data,
-            max_hops=self.config.get("max_hops", 4))}
-
-
-class GraphLandmarkCentrality(KiaraModule):
-    """Landmark-sampled closeness + harmonic centrality (one tagged BFS)."""
-
-    _module_type_name = "network_graph.landmark_centrality"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"},
-                "landmarks": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": landmark_centrality(
-            inputs["graph"].data["edges"],
-            inputs["landmarks"].data,
-            max_hops=self.config.get("max_hops", 3))}
-
-
-class GraphDiameterEstimate(KiaraModule):
-    """Double-sweep BFS diameter lower bound (two frontier BFS runs)."""
-
-    _module_type_name = "network_graph.diameter_estimate"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": diameter_double_sweep(
-            inputs["graph"].data["edges"],
-            max_hops=self.config.get("max_hops", 6))}
-
-
-class GraphPersonalizedPagerank(KiaraModule):
-    """Personalized (seed-teleport) PageRank, fixed iterations."""
-
-    _module_type_name = "network_graph.pagerank_personalized"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}, "seeds": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": pagerank_personalized(
-            inputs["graph"].data["edges"],
-            inputs["seeds"].data,
-            iterations=self.config.get("iterations", 3),
-            damping=self.config.get("damping", 0.85))}
-
-
-class GraphKCore(KiaraModule):
-    """Fixed-round k-core peeling (degree-< k removal, see kcore_peel)."""
-
-    _module_type_name = "network_graph.kcore"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": kcore_peel(
-            inputs["graph"].data["edges"],
-            k=self.config.get("k", 2),
-            rounds=self.config.get("rounds", 3))}
-
-
-class GraphKTruss(KiaraModule):
-    """Fixed-round k-truss edge prune (support-< k−2 removal, see
-    ktruss_prune)."""
-
-    _module_type_name = "network_graph.ktruss"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": ktruss_prune(
-            inputs["graph"].data["edges"],
-            k=self.config.get("k", 4),
-            rounds=self.config.get("rounds", 3))}
-
-
-class GraphLinkPrediction(KiaraModule):
-    """Common-neighbor / Adamic-Adar / preferential-attachment link
-    scoring (see link_prediction)."""
-
-    _module_type_name = "network_graph.link_prediction"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": link_prediction(
-            inputs["graph"].data["edges"],
-            top_k=self.config.get("top_k", 100),
-            min_common=self.config.get("min_common", 2))}
-
-
-class GraphShortestPathsWeighted(KiaraModule):
-    """Weighted shortest distances (Bellman-Ford rounds) from a source set."""
-
-    _module_type_name = "network_graph.shortest_paths_weighted"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}, "sources": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": shortest_paths_weighted(
-            inputs["graph"].data["edges"],
-            inputs["sources"].data,
-            weight_col=self.config.get("weight_column", "weight"),
-            rounds=self.config.get("rounds", 4))}
-
-
-class GraphHITS(KiaraModule):
-    """Hub/authority scores, fixed iterations (see hits)."""
-
-    _module_type_name = "network_graph.hits"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": hits(
-            inputs["graph"].data["edges"],
-            iterations=self.config.get("iterations", 2))}
-
-
-class GraphNodeSimilarity(KiaraModule):
-    """Neighbor-set Jaccard for co-neighbor pairs (see
-    node_similarity_jaccard)."""
-
-    _module_type_name = "network_graph.node_similarity"
-
-    def create_inputs_schema(self):
-        return {"graph": {"type": "network_graph"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": node_similarity_jaccard(
-            inputs["graph"].data["edges"],
-            min_common=self.config.get("min_common", 1),
-            max_degree=self.config.get("max_degree"))}
+CreateDatabaseFromFolder = _simple_module(
+    "create.database.from.folder",
+    {"path": STRING},
+    {"database": {"type": "database"}},
+    lambda self, im, ctx: {"database": database_from_folder(ctx.spark, im["path"].data)},
+)
+
+DatabaseQuery = _simple_module(
+    "database.query.sql",
+    {"database": {"type": "database"}, "query": STRING},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": database_query(im["database"].data,
+                                                   im["query"].data)},
+)
+
+
+def _database_pick_table_process(self, im, ctx):
+    db = im["database"].data
+    name = im["table_name"].data
+    if name not in db:
+        raise KeyError(f"no table {name!r} in database; has {sorted(db)}")
+    return {"table": db[name]}
+
+
+DatabasePickTable = _simple_module(
+    "database.pick.table",
+    {"database": {"type": "database"}, "table_name": STRING},
+    {"table": TABLE},
+    _database_pick_table_process,
+)
+
+
+def _create_graph_from_tables_process(self, im, ctx):
+    src = self.config.get("source_column", "src")
+    dst = self.config.get("target_column", "dst")
+    edges = im["edges"].data.withColumnsRenamed({src: "src", dst: "dst"})
+    graph = {"edges": edges}
+    if "nodes" in im:
+        graph["nodes"] = im["nodes"].data
+    return {"graph": graph}
+
+
+CreateGraphFromTables = _simple_module(
+    "create.network_graph.from.tables",
+    {"edges": TABLE, "nodes": {"type": "table", "optional": True}},
+    {"graph": {"type": "network_graph"}},
+    _create_graph_from_tables_process,
+)
+
+GraphDegrees = _simple_module(
+    "network_graph.degrees",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": degrees(
+        im["graph"].data["edges"], **config_kwargs(self, "directed"))},
+)
+
+GraphTwoHopApprox = _simple_module(
+    "network_graph.two_hop_approx",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": neighbors_within_2_hops_approx(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "rsd"))},
+    doc="""Sketch-based 2-hop neighborhood size (see
+    neighbors_within_2_hops_approx) — constant memory per node.""",
+)
+
+GraphComponents = _simple_module(
+    "network_graph.connected_components",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": connected_components(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "max_iterations", "driver_threshold",
+                        "algorithm"))},
+)
+
+GraphSCC = _simple_module(
+    "network_graph.strongly_connected_components",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": strongly_connected_components(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "max_peel_rounds", "propagate_rounds",
+                        "driver_threshold"))},
+    doc="""Strongly connected components of a directed graph (min-id label;
+    see strongly_connected_components).""",
+)
+
+GraphLabelPropagation = _simple_module(
+    "network_graph.label_propagation",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": label_propagation(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "iterations"))},
+)
+
+GraphPagerank = _simple_module(
+    "network_graph.pagerank",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": pagerank(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "iterations", "damping"))},
+)
+
+GraphBfsHops = _simple_module(
+    "network_graph.bfs_hops",
+    {"graph": {"type": "network_graph"}, "sources": TABLE},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": bfs_hops(
+        im["graph"].data["edges"],
+        im["sources"].data,
+        **config_kwargs(self, "max_hops"))},
+    doc="Multi-source BFS distances (capped): frontier-only expansion.",
+)
+
+GraphLandmarkCentrality = _simple_module(
+    "network_graph.landmark_centrality",
+    {"graph": {"type": "network_graph"}, "landmarks": TABLE},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": landmark_centrality(
+        im["graph"].data["edges"],
+        im["landmarks"].data,
+        **config_kwargs(self, "max_hops"))},
+    doc="Landmark-sampled closeness + harmonic centrality (one tagged BFS).",
+)
+
+GraphDiameterEstimate = _simple_module(
+    "network_graph.diameter_estimate",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": diameter_double_sweep(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "max_hops"))},
+    doc="Double-sweep BFS diameter lower bound (two frontier BFS runs).",
+)
+
+GraphPersonalizedPagerank = _simple_module(
+    "network_graph.pagerank_personalized",
+    {"graph": {"type": "network_graph"}, "seeds": TABLE},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": pagerank_personalized(
+        im["graph"].data["edges"],
+        im["seeds"].data,
+        **config_kwargs(self, "iterations", "damping"))},
+    doc="Personalized (seed-teleport) PageRank, fixed iterations.",
+)
+
+GraphKCore = _simple_module(
+    "network_graph.kcore",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": kcore_peel(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "k", "rounds"))},
+    doc="Fixed-round k-core peeling (degree-< k removal, see kcore_peel).",
+)
+
+GraphKTruss = _simple_module(
+    "network_graph.ktruss",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": ktruss_prune(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "k", "rounds"))},
+    doc="""Fixed-round k-truss edge prune (support-< k−2 removal, see
+    ktruss_prune).""",
+)
+
+GraphLinkPrediction = _simple_module(
+    "network_graph.link_prediction",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": link_prediction(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "top_k", "min_common"))},
+    doc="""Common-neighbor / Adamic-Adar / preferential-attachment link
+    scoring (see link_prediction).""",
+)
+
+GraphShortestPathsWeighted = _simple_module(
+    "network_graph.shortest_paths_weighted",
+    {"graph": {"type": "network_graph"}, "sources": TABLE},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": shortest_paths_weighted(
+        im["graph"].data["edges"],
+        im["sources"].data,
+        **config_kwargs(self, "rounds", weight_col="weight_column"))},
+    doc="Weighted shortest distances (Bellman-Ford rounds) from a source set.",
+)
+
+GraphHITS = _simple_module(
+    "network_graph.hits",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": hits(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "iterations"))},
+    doc="Hub/authority scores, fixed iterations (see hits).",
+)
+
+GraphNodeSimilarity = _simple_module(
+    "network_graph.node_similarity",
+    {"graph": {"type": "network_graph"}},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": node_similarity_jaccard(
+        im["graph"].data["edges"],
+        **config_kwargs(self, "min_common", "max_degree"))},
+    doc="""Neighbor-set Jaccard for co-neighbor pairs (see
+    node_similarity_jaccard).""",
+)
 
 
 MODULES = [CreateDatabaseFromFolder, DatabaseQuery, DatabasePickTable,

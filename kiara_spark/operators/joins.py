@@ -28,9 +28,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..modules import KiaraModule
+from ..modules import (STRING, TABLE, ModuleCharacteristics, _simple_module,
+                       config_kwargs)
 from ..operations import Operation
-from ..values import ValueMap
+from .tables import store_bucketed
 
 # Size-gated broadcast (round-9 verdict: three TPC-H plans hard-broadcast
 # orders-derived slices that scale linearly with the data — fine at sf0.1,
@@ -300,93 +301,50 @@ def salted_join(
     return l_salted.join(r_salted, on=[*keys, "_salt"], how=how).drop("_salt")
 
 
-class AsofJoin(KiaraModule):
-    """As-of join module (op ``table.join.asof``); no reference analog —
-    additive temporal operator (SURVEY §2.3 declares the family)."""
+AsofJoin = _simple_module(
+    "table.join.asof", {"left": TABLE, "right": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": asof_join(
+        im["left"].data,
+        im["right"].data,
+        by=self.config.get("by", "user_id"),
+        **config_kwargs(self, "left_ts", "right_ts", "direction",
+                        value_cols="value_columns"),
+    )},
+    doc="""As-of join module (op ``table.join.asof``); no reference analog —
+    additive temporal operator (SURVEY §2.3 declares the family).""",
+)
 
-    _module_type_name = "table.join.asof"
+RangeJoin = _simple_module(
+    "table.join.range", {"left": TABLE, "right": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": range_join(
+        im["left"].data,
+        im["right"].data,
+        by=self.config.get("by", "user_id"),
+        **config_kwargs(self, "left_ts", "right_ts", "lower", "upper"),
+    )},
+)
 
-    def create_inputs_schema(self):
-        return {"left": {"type": "table"}, "right": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": asof_join(
-            inputs["left"].data,
-            inputs["right"].data,
-            by=self.config.get("by", "user_id"),
-            left_ts=self.config.get("left_ts", "ts"),
-            right_ts=self.config.get("right_ts"),
-            value_cols=self.config.get("value_columns"),
-            direction=self.config.get("direction", "backward"),
-        )}
-
-
-class RangeJoin(KiaraModule):
-    _module_type_name = "table.join.range"
-
-    def create_inputs_schema(self):
-        return {"left": {"type": "table"}, "right": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": range_join(
-            inputs["left"].data,
-            inputs["right"].data,
-            by=self.config.get("by", "user_id"),
-            left_ts=self.config.get("left_ts", "ts"),
-            right_ts=self.config.get("right_ts"),
-            lower=self.config.get("lower", 0.0),
-            upper=self.config.get("upper", 0.0),
-        )}
+SaltedJoin = _simple_module(
+    "table.join.salted", {"left": TABLE, "right": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": salted_join(
+        im["left"].data, im["right"].data,
+        on=self.config.get("on", []),
+        **config_kwargs(self, "how", "salt"),
+    )},
+)
 
 
-class SaltedJoin(KiaraModule):
-    _module_type_name = "table.join.salted"
-
-    def create_inputs_schema(self):
-        return {"left": {"type": "table"}, "right": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": salted_join(
-            inputs["left"].data, inputs["right"].data,
-            on=self.config.get("on", []),
-            how=self.config.get("how", "inner"),
-            salt=self.config.get("salt", 16),
-        )}
-
-
-class StoreBucketed(KiaraModule):
-    """Persist as a bucketed managed table for repeated shuffle-free joins
-    (non-idempotent: it writes)."""
-
-    _module_type_name = "table.store.bucketed"
-    from ..modules import ModuleCharacteristics as _MC
-
-    _characteristics = _MC(is_idempotent=False)
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}, "name": {"type": "string"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        from .tables import store_bucketed
-
-        return {"table": store_bucketed(
-            inputs["table"].data, inputs["name"].data,
-            bucket_by=self.config.get("bucket_by", []),
-            num_buckets=self.config.get("num_buckets", 32),
-            sort_by=self.config.get("sort_by"),
-        )}
+StoreBucketed = _simple_module(
+    "table.store.bucketed", {"table": TABLE, "name": STRING}, {"table": TABLE},
+    lambda self, im, ctx: {"table": store_bucketed(
+        im["table"].data, im["name"].data,
+        bucket_by=self.config.get("bucket_by", []),
+        **config_kwargs(self, "num_buckets", "sort_by"),
+    )},
+    doc="""Persist as a bucketed managed table for repeated shuffle-free joins
+    (non-idempotent: it writes).""",
+    characteristics=ModuleCharacteristics(is_idempotent=False),
+)
 
 
 def bloom_prefilter_join(
@@ -473,49 +431,45 @@ def bloom_prefilter_join(
     return out
 
 
-class BloomPrefilterJoin(KiaraModule):
-    """Bloom-prefiltered semi-join (see bloom_prefilter_join)."""
-
-    _module_type_name = "table.join.bloom_prefilter"
-
-    def create_inputs_schema(self):
-        return {"probe": {"type": "table"}, "build": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        cfg = self.config
-        return {"table": bloom_prefilter_join(
-            inputs["probe"].data, inputs["build"].data,
-            probe_key=cfg["probe_key"],
-            build_key=cfg.get("build_key"),
-            n_hashes=int(cfg.get("n_hashes", 5)),
-            bits_per_key=int(cfg.get("bits_per_key", 16)),
-            exact=bool(cfg.get("exact", True)))}
+def _bloom_prefilter_join_process(self, im, ctx):
+    cfg = self.config
+    return {"table": bloom_prefilter_join(
+        im["probe"].data, im["build"].data,
+        probe_key=cfg["probe_key"],
+        build_key=cfg.get("build_key"),
+        n_hashes=int(cfg.get("n_hashes", 5)),
+        bits_per_key=int(cfg.get("bits_per_key", 16)),
+        exact=bool(cfg.get("exact", True)))}
 
 
-class IntervalOverlapJoin(KiaraModule):
-    """Bucketized interval-overlap join (see interval_overlap_join)."""
+BloomPrefilterJoin = _simple_module(
+    "table.join.bloom_prefilter",
+    {"probe": TABLE, "build": TABLE},
+    {"table": TABLE},
+    _bloom_prefilter_join_process,
+    doc="Bloom-prefiltered semi-join (see bloom_prefilter_join).",
+)
 
-    _module_type_name = "table.join.interval_overlap"
 
-    def create_inputs_schema(self):
-        return {"left": {"type": "table"}, "right": {"type": "table"}}
+def _interval_overlap_join_process(self, im, ctx):
+    cfg = self.config
+    return {"table": interval_overlap_join(
+        im["left"].data, im["right"].data,
+        on=cfg.get("on"),
+        left_start=cfg.get("left_start", "start"),
+        left_end=cfg.get("left_end", "end"),
+        right_start=cfg.get("right_start"),
+        right_end=cfg.get("right_end"),
+        bucket_width=float(cfg.get("bucket_width", 86400.0)))}
 
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
 
-    def process(self, inputs: ValueMap, context):
-        cfg = self.config
-        return {"table": interval_overlap_join(
-            inputs["left"].data, inputs["right"].data,
-            on=cfg.get("on"),
-            left_start=cfg.get("left_start", "start"),
-            left_end=cfg.get("left_end", "end"),
-            right_start=cfg.get("right_start"),
-            right_end=cfg.get("right_end"),
-            bucket_width=float(cfg.get("bucket_width", 86400.0)))}
+IntervalOverlapJoin = _simple_module(
+    "table.join.interval_overlap",
+    {"left": TABLE, "right": TABLE},
+    {"table": TABLE},
+    _interval_overlap_join_process,
+    doc="Bucketized interval-overlap join (see interval_overlap_join).",
+)
 
 
 def geo_radius_join(
@@ -723,50 +677,28 @@ def asof_join_cogroup(
     return l.groupBy("_b").cogroup(r.groupBy("_b")).applyInPandas(merge, schema)
 
 
-class GeoRadiusJoin(KiaraModule):
-    """Grid-bucketed great-circle radius join (see geo_radius_join)."""
+GeoRadiusJoin = _simple_module(
+    "table.join.geo_radius", {"left": TABLE, "right": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": geo_radius_join(
+        im["left"].data, im["right"].data,
+        radius_km=self.config["radius_km"],
+        **config_kwargs(self, "left_id", "right_id", lat_col="lat_column",
+                        lon_col="lon_column"))},
+    doc="Grid-bucketed great-circle radius join (see geo_radius_join).",
+)
 
-    _module_type_name = "table.join.geo_radius"
-
-    def create_inputs_schema(self):
-        return {"left": {"type": "table"}, "right": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": geo_radius_join(
-            inputs["left"].data, inputs["right"].data,
-            radius_km=self.config["radius_km"],
-            lat_col=self.config.get("lat_column", "lat"),
-            lon_col=self.config.get("lon_column", "lon"),
-            left_id=self.config.get("left_id", "id"),
-            right_id=self.config.get("right_id", "id"))}
-
-
-class AsofJoinCogroup(KiaraModule):
-    """As-of join on the cogroup+applyInPandas API (per-key merge_asof) —
-    the vectorized-Python seam for custom per-key alignment."""
-
-    _module_type_name = "table.join.asof_cogroup"
-
-    def create_inputs_schema(self):
-        return {"left": {"type": "table"}, "right": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": asof_join_cogroup(
-            inputs["left"].data,
-            inputs["right"].data,
-            by=self.config.get("by", "user_id"),
-            ts_col=self.config.get("ts_column", "ts"),
-            left_id=self.config.get("left_id", "event_id"),
-            right_id=self.config.get("right_id", "event_id"),
-            right_value=self.config.get("right_value", "value"),
-            n_buckets=self.config.get("n_buckets", 32),
-            out_prefix=self.config.get("out_prefix", "purchase_"))}
+AsofJoinCogroup = _simple_module(
+    "table.join.asof_cogroup",
+    {"left": TABLE, "right": TABLE},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": asof_join_cogroup(
+        im["left"].data,
+        im["right"].data,
+        **config_kwargs(self, "by", "left_id", "right_id", "right_value",
+                        "n_buckets", "out_prefix", ts_col="ts_column"))},
+    doc="""As-of join on the cogroup+applyInPandas API (per-key merge_asof) —
+    the vectorized-Python seam for custom per-key alignment.""",
+)
 
 
 MODULES = [AsofJoinCogroup, GeoRadiusJoin, AsofJoin, RangeJoin, SaltedJoin, StoreBucketed, IntervalOverlapJoin,

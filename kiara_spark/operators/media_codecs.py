@@ -361,7 +361,7 @@ def decode_audio(df: DataFrame, binary_col: str = "media",
 # module registration
 # ---------------------------------------------------------------------------
 
-from ..modules import KiaraModule  # noqa: E402
+from ..modules import TABLE, _simple_module, config_kwargs  # noqa: E402
 IMAGE_DHASH_SCHEMA = ("id long, format string, width int, height int, "
                       "dhash long")
 
@@ -466,86 +466,55 @@ def dhash_neardup_pairs(sig: DataFrame, id_col: str = "id",
             .select("id_a", "id_b", "hamming"))
 
 
-from ..values import ValueMap  # noqa: E402
 
 
-class MediaDecodeImageReal(KiaraModule):
-    """Real BMP/PPM/PGM pixel decode (replaces the stub when the blob is
-    one of the supported formats; unknown formats degrade to NULL rows)."""
+MediaDecodeImageReal = _simple_module(
+    "media.decode_image_real", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": decode_image(
+        im["table"].data,
+        **config_kwargs(self, binary_col="binary_column",
+                        id_col="id_column"))},
+    doc="""Real BMP/PPM/PGM pixel decode (replaces the stub when the blob is
+    one of the supported formats; unknown formats degrade to NULL rows).""",
+)
 
-    _module_type_name = "media.decode_image_real"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": decode_image(
-            inputs["table"].data,
-            binary_col=self.config.get("binary_column", "media"),
-            id_col=self.config.get("id_column", "id"))}
-
-
-class MediaDecodeAudioReal(KiaraModule):
-    """Real RIFF/WAVE PCM-16 decode."""
-
-    _module_type_name = "media.decode_audio_real"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": decode_audio(
-            inputs["table"].data,
-            binary_col=self.config.get("binary_column", "media"),
-            id_col=self.config.get("id_column", "id"))}
+MediaDecodeAudioReal = _simple_module(
+    "media.decode_audio_real", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": decode_audio(
+        im["table"].data,
+        **config_kwargs(self, binary_col="binary_column",
+                        id_col="id_column"))},
+    doc="Real RIFF/WAVE PCM-16 decode.",
+)
 
 
 from ..operations import Operation  # noqa: E402
 
-class MediaImageDhash(KiaraModule):
-    """Perceptual dHash fingerprints over decoded pixels (see
-    image_dhash)."""
-
-    _module_type_name = "media.image_dhash"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": image_dhash(
-            inputs["table"].data,
-            binary_col=self.config.get("binary_column", "media"),
-            id_col=self.config.get("id_column", "id"))}
+MediaImageDhash = _simple_module(
+    "media.image_dhash", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": image_dhash(
+        im["table"].data,
+        **config_kwargs(self, binary_col="binary_column",
+                        id_col="id_column"))},
+    doc="""Perceptual dHash fingerprints over decoded pixels (see
+    image_dhash).""",
+)
 
 
-class MediaDedupImages(KiaraModule):
-    """Near-duplicate image pairs via banded dHash LSH (see
-    dhash_neardup_pairs)."""
+def _media_dedup_images_process(self, im, ctx):
+    sig = image_dhash(
+        im["table"].data,
+        **config_kwargs(self, binary_col="binary_column", id_col="id_column"))
+    return {"pairs": dhash_neardup_pairs(
+        sig, **config_kwargs(self, "max_hamming"))}
 
-    _module_type_name = "media.dedup_images"
 
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"pairs": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        sig = image_dhash(
-            inputs["table"].data,
-            binary_col=self.config.get("binary_column", "media"),
-            id_col=self.config.get("id_column", "id"))
-        return {"pairs": dhash_neardup_pairs(
-            sig, max_hamming=self.config.get("max_hamming", 3))}
+MediaDedupImages = _simple_module(
+    "media.dedup_images", {"table": TABLE}, {"pairs": TABLE},
+    _media_dedup_images_process,
+    doc="""Near-duplicate image pairs via banded dHash LSH (see
+    dhash_neardup_pairs).""",
+)
 
 
 MODULES = [MediaDecodeImageReal, MediaDecodeAudioReal, MediaImageDhash,

@@ -19,49 +19,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..modules import KiaraModule, ModuleCharacteristics
+from ..io import collect_table_page, show_string
+from ..modules import (DICT, STRING, TABLE, KiaraModule, ModuleCharacteristics,
+                       _simple_module, config_kwargs)
 from ..operations import Operation
-from ..values import ValueMap
+from ..values import Value, ValueMap
 
 
-class LogicAnd(KiaraModule):
-    _module_type_name = "logic.and"
+LogicAnd = _simple_module(
+    "logic.and",
+    {"a": {"type": "boolean"}, "b": {"type": "boolean"}},
+    {"y": {"type": "boolean"}},
+    lambda self, im, ctx: {"y": bool(im["a"].data and im["b"].data)},
+)
 
-    def create_inputs_schema(self):
-        return {"a": {"type": "boolean"}, "b": {"type": "boolean"}}
+LogicOr = _simple_module(
+    "logic.or",
+    {"a": {"type": "boolean"}, "b": {"type": "boolean"}},
+    {"y": {"type": "boolean"}},
+    lambda self, im, ctx: {"y": bool(im["a"].data or im["b"].data)},
+)
 
-    def create_outputs_schema(self):
-        return {"y": {"type": "boolean"}}
+LogicXor = _simple_module(
+    "logic.xor",
+    {"a": {"type": "boolean"}, "b": {"type": "boolean"}},
+    {"y": {"type": "boolean"}},
+    lambda self, im, ctx: {"y": bool(im["a"].data) != bool(im["b"].data)},
+)
 
-    def process(self, inputs: ValueMap, context):
-        return {"y": bool(inputs["a"].data and inputs["b"].data)}
-
-
-class LogicOr(LogicAnd):
-    _module_type_name = "logic.or"
-
-    def process(self, inputs: ValueMap, context):
-        return {"y": bool(inputs["a"].data or inputs["b"].data)}
-
-
-class LogicXor(LogicAnd):
-    _module_type_name = "logic.xor"
-
-    def process(self, inputs: ValueMap, context):
-        return {"y": bool(inputs["a"].data) != bool(inputs["b"].data)}
-
-
-class LogicNot(KiaraModule):
-    _module_type_name = "logic.not"
-
-    def create_inputs_schema(self):
-        return {"a": {"type": "boolean"}}
-
-    def create_outputs_schema(self):
-        return {"y": {"type": "boolean"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"y": not inputs["a"].data}
+LogicNot = _simple_module(
+    "logic.not", {"a": {"type": "boolean"}}, {"y": {"type": "boolean"}},
+    lambda self, im, ctx: {"y": not im["a"].data},
+)
 
 
 class MockModule(KiaraModule):
@@ -108,148 +97,128 @@ class MockModule(KiaraModule):
         return out
 
 
-class PrettyPrintValue(KiaraModule):
-    """Reference pretty_print.py:35-191; for tables: capture df.show()."""
-
-    _module_type_name = "pretty_print.value"
-    _characteristics = ModuleCharacteristics(is_internal=True)
-
-    def create_inputs_schema(self):
-        return {"value": {"type": "any"}}
-
-    def create_outputs_schema(self):
-        return {"rendered_value": {"type": "string"}}
-
-    def process(self, inputs: ValueMap, context):
-        from ..io import show_string
-
-        return {"rendered_value": show_string(
-            inputs["value"].data, self.config.get("max_rows", 20))}
+PrettyPrintValue = _simple_module(
+    "pretty_print.value",
+    {"value": {"type": "any"}},
+    {"rendered_value": STRING},
+    lambda self, im, ctx: {"rendered_value": show_string(
+        im["value"].data, **config_kwargs(self, n="max_rows"))},
+    doc="Reference pretty_print.py:35-191; for tables: capture df.show().",
+    characteristics=ModuleCharacteristics(is_internal=True),
+)
 
 
-class RenderValue(KiaraModule):
-    """Reference ``included_core_modules/render_value.py`` (render.value):
+def _render_value_process(self, im, ctx):
+    cfg = dict(self.config)
+    if "render_config" in im:
+        cfg.update(im["render_config"].data or {})
+    offset = int(cfg.get("offset", 0))
+    limit = int(cfg.get("limit", 20))
+    data = im["value"].data
+    if isinstance(data, DataFrame):
+        page = collect_table_page(data, offset, limit)
+        result = {
+            "kind": "table_page",
+            "columns": page["columns"],
+            "rows": page["rows"],
+            "offset": offset,
+            "limit": limit,
+            "related_scenes": {
+                "first": {"offset": 0, "limit": limit},
+                "next": {"offset": offset + limit, "limit": limit},
+                "previous": {"offset": max(0, offset - limit), "limit": limit},
+            },
+        }
+    else:
+        result = {"kind": "string", "rendered": repr(data),
+                  "offset": 0, "limit": limit, "related_scenes": {}}
+    return {"render_value_result": result}
+
+
+RenderValue = _simple_module(
+    "render.value",
+    {"value": {"type": "any"},
+     "render_config": {"type": "dict", "optional": True}},
+    {"render_value_result": DICT},
+    _render_value_process,
+    doc="""Reference ``included_core_modules/render_value.py`` (render.value):
     paginated render with scene navigation for front-ends.  For tables the
     page is ``offset/limit`` pushed into the plan (Spark ``offset`` + limit —
-    no full materialization; only the page crosses to the driver)."""
-
-    _module_type_name = "render.value"
-    _characteristics = ModuleCharacteristics(is_internal=True)
-
-    def create_inputs_schema(self):
-        return {"value": {"type": "any"},
-                "render_config": {"type": "dict", "optional": True}}
-
-    def create_outputs_schema(self):
-        return {"render_value_result": {"type": "dict"}}
-
-    def process(self, inputs: ValueMap, context):
-        cfg = dict(self.config)
-        if "render_config" in inputs:
-            cfg.update(inputs["render_config"].data or {})
-        offset = int(cfg.get("offset", 0))
-        limit = int(cfg.get("limit", 20))
-        data = inputs["value"].data
-        if isinstance(data, DataFrame):
-            from ..io import collect_table_page
-
-            page = collect_table_page(data, offset, limit)
-            result = {
-                "kind": "table_page",
-                "columns": page["columns"],
-                "rows": page["rows"],
-                "offset": offset,
-                "limit": limit,
-                "related_scenes": {
-                    "first": {"offset": 0, "limit": limit},
-                    "next": {"offset": offset + limit, "limit": limit},
-                    "previous": {"offset": max(0, offset - limit), "limit": limit},
-                },
-            }
-        else:
-            result = {"kind": "string", "rendered": repr(data),
-                      "offset": 0, "limit": limit, "related_scenes": {}}
-        return {"render_value_result": result}
+    no full materialization; only the page crosses to the driver).""",
+    characteristics=ModuleCharacteristics(is_internal=True),
+)
 
 
-class RenderItem(KiaraModule):
-    """Template rendering as an operation: routes through the context's
+def _render_item_process(self, im, ctx):
+    source_type = self.config["source_type"]
+    target_type = self.config["target_type"]
+    cfg = dict(self.config.get("render_config", {}))
+    if "render_config" in im:
+        cfg.update(im["render_config"].data or {})
+    item = im["item"]
+    # value renderers consume the Value wrapper (id + type travel into
+    # the page); everything else unwraps to the raw payload
+    source = item if source_type == "value" and isinstance(item, Value) \
+        else item.data
+    rendered = ctx.render_registry.render(
+        source_type, target_type, source, **cfg)
+    return {"rendered": rendered}
+
+
+RenderItem = _simple_module(
+    "render.item",
+    {"item": {"type": "any"},
+     "render_config": {"type": "dict", "optional": True}},
+    {"rendered": STRING},
+    _render_item_process,
+    doc="""Template rendering as an operation: routes through the context's
     RenderRegistry (renderers.py — the reference's jinja renderer stack,
     ``src/kiara/renderers/``), minted per (source, target) combination as
     ``render.<source>.as.<target>`` operations.  For table values the
     renderer pushes offset/limit into the Spark plan — one page of rows
-    crosses to the driver, never the table."""
-
-    _module_type_name = "render.item"
-    _characteristics = ModuleCharacteristics(is_internal=True)
-
-    def create_inputs_schema(self):
-        return {"item": {"type": "any"},
-                "render_config": {"type": "dict", "optional": True}}
-
-    def create_outputs_schema(self):
-        return {"rendered": {"type": "string"}}
-
-    def process(self, inputs: ValueMap, context):
-        from ..values import Value
-
-        source_type = self.config["source_type"]
-        target_type = self.config["target_type"]
-        cfg = dict(self.config.get("render_config", {}))
-        if "render_config" in inputs:
-            cfg.update(inputs["render_config"].data or {})
-        item = inputs["item"]
-        # value renderers consume the Value wrapper (id + type travel into
-        # the page); everything else unwraps to the raw payload
-        source = item if source_type == "value" and isinstance(item, Value) \
-            else item.data
-        rendered = context.render_registry.render(
-            source_type, target_type, source, **cfg)
-        return {"rendered": rendered}
+    crosses to the driver, never the table.""",
+    characteristics=ModuleCharacteristics(is_internal=True),
+)
 
 
-class ExtractMetadata(KiaraModule):
-    """Reference metadata.py:26-88 — profiling as a distributed job.
+def _extract_metadata_process(self, im, ctx):
+    df: DataFrame = im["value"].data
+    atomic = [
+        f.name for f in df.schema.fields
+        if f.dataType.typeName() in
+        ("integer", "long", "double", "float", "string", "timestamp", "date", "boolean")
+    ]
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for c in atomic:
+        aggs += [
+            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}__nulls"),
+            F.min(c).alias(f"{c}__min"),
+            F.max(c).alias(f"{c}__max"),
+        ]
+    row = df.agg(*aggs).collect()[0].asDict()
+    meta = {
+        "rows": row["__n"],
+        "columns": {
+            f.name: {"type": f.dataType.simpleString()} for f in df.schema.fields
+        },
+    }
+    for c in atomic:
+        meta["columns"][c].update(
+            nulls=row[f"{c}__nulls"], min=str(row[f"{c}__min"]), max=str(row[f"{c}__max"])
+        )
+    return {"value_metadata": meta}
+
+
+ExtractMetadata = _simple_module(
+    "value.extract_metadata", {"value": TABLE}, {"value_metadata": DICT},
+    _extract_metadata_process,
+    doc="""Reference metadata.py:26-88 — profiling as a distributed job.
 
     One pass: count + per-column null counts + min/max for atomic columns
     (single aggregate, map-side combined; no row data reaches the driver).
-    """
-
-    _module_type_name = "value.extract_metadata"
-    _characteristics = ModuleCharacteristics(is_internal=True)
-
-    def create_inputs_schema(self):
-        return {"value": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"value_metadata": {"type": "dict"}}
-
-    def process(self, inputs: ValueMap, context):
-        df: DataFrame = inputs["value"].data
-        atomic = [
-            f.name for f in df.schema.fields
-            if f.dataType.typeName() in
-            ("integer", "long", "double", "float", "string", "timestamp", "date", "boolean")
-        ]
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in atomic:
-            aggs += [
-                F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}__nulls"),
-                F.min(c).alias(f"{c}__min"),
-                F.max(c).alias(f"{c}__max"),
-            ]
-        row = df.agg(*aggs).collect()[0].asDict()
-        meta = {
-            "rows": row["__n"],
-            "columns": {
-                f.name: {"type": f.dataType.simpleString()} for f in df.schema.fields
-            },
-        }
-        for c in atomic:
-            meta["columns"][c].update(
-                nulls=row[f"{c}__nulls"], min=str(row[f"{c}__min"]), max=str(row[f"{c}__max"])
-            )
-        return {"value_metadata": meta}
+    """,
+    characteristics=ModuleCharacteristics(is_internal=True),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -601,117 +570,57 @@ def resize_image_stub(df: DataFrame, target_w: int = 224, target_h: int = 224,
                "resized_w int, resized_h int, scale double")
 
 
-class MediaResizeImage(KiaraModule):
-    _module_type_name = "media.resize_image"
+MediaResizeImage = _simple_module(
+    "media.resize_image", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": resize_image_stub(
+        im["table"].data,
+        **config_kwargs(self, target_w="target_width",
+                        target_h="target_height", id_col="id_column"))},
+)
 
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
+MediaFrameSample = _simple_module(
+    "media.frame_sample", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": frame_sample_stub(
+        im["table"].data,
+        **config_kwargs(self, "frame_bytes", "max_frames",
+                        binary_col="binary_column", id_col="id_column"))},
+)
 
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
+MediaSceneCuts = _simple_module(
+    "media.scene_cuts", {"frames": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": scene_cuts_stub(
+        im["frames"].data,
+        **config_kwargs(self, "threshold", id_col="id_column"))},
+)
 
-    def process(self, inputs: ValueMap, context):
-        return {"table": resize_image_stub(
-            inputs["table"].data,
-            target_w=self.config.get("target_width", 224),
-            target_h=self.config.get("target_height", 224),
-            id_col=self.config.get("id_column", "id"))}
+MediaAttachMetadata = _simple_module(
+    "media.attach_metadata", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": attach_media_metadata(
+        im["table"].data, **config_kwargs(self, binary_col="binary_column"))},
+)
 
+MediaDecodeImage = _simple_module(
+    "media.decode_image", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": decode_image_stub(
+        im["table"].data,
+        **config_kwargs(self, "passthrough", "decoder",
+                        binary_col="binary_column"))},
+)
 
-class MediaFrameSample(KiaraModule):
-    _module_type_name = "media.frame_sample"
+MediaDecodeAudio = _simple_module(
+    "media.decode_audio", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": decode_audio_stub(
+        im["table"].data,
+        **config_kwargs(self, "passthrough", binary_col="binary_column"))},
+)
 
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": frame_sample_stub(
-            inputs["table"].data,
-            binary_col=self.config.get("binary_column", "media"),
-            id_col=self.config.get("id_column", "id"),
-            frame_bytes=self.config.get("frame_bytes", 1000),
-            max_frames=self.config.get("max_frames", 8))}
-
-
-class MediaSceneCuts(KiaraModule):
-    _module_type_name = "media.scene_cuts"
-
-    def create_inputs_schema(self):
-        return {"frames": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": scene_cuts_stub(
-            inputs["frames"].data,
-            id_col=self.config.get("id_column", "id"),
-            threshold=self.config.get("threshold", 500))}
-
-
-class MediaAttachMetadata(KiaraModule):
-    _module_type_name = "media.attach_metadata"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": attach_media_metadata(
-            inputs["table"].data, self.config.get("binary_column", "media"))}
-
-
-class MediaDecodeImage(KiaraModule):
-    _module_type_name = "media.decode_image"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": decode_image_stub(
-            inputs["table"].data, self.config.get("binary_column", "media"),
-            passthrough=tuple(self.config.get("passthrough", ())),
-            decoder=self.config.get("decoder", "auto"))}
-
-
-class MediaDecodeAudio(KiaraModule):
-    _module_type_name = "media.decode_audio"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": decode_audio_stub(
-            inputs["table"].data, self.config.get("binary_column", "media"),
-            passthrough=tuple(self.config.get("passthrough", ())))}
-
-
-class MediaEmbed(KiaraModule):
-    _module_type_name = "media.embed"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": embed_media_stub(
-            inputs["table"].data,
-            binary_col=self.config.get("binary_column", "media"),
-            id_col=self.config.get("id_column", "id"),
-            dim=self.config.get("dim", 8))}
+MediaEmbed = _simple_module(
+    "media.embed", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": embed_media_stub(
+        im["table"].data,
+        **config_kwargs(self, "dim", binary_col="binary_column",
+                        id_col="id_column"))},
+)
 
 
 MODULES = [

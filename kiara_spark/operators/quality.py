@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..operations import Operation
 from ..values import ValueMap
-from .tables import DICT, STRING, TABLE, _simple_module
+from ..modules import DICT, TABLE, _simple_module, config_kwargs
 
 
 def merge_upsert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
@@ -1572,7 +1572,7 @@ TableValidateSchema = _simple_module(
 def _diff_process(self, im: ValueMap, ctx):
     return {"table": table_diff(
         im["old"].data, im["new"].data, self.config["keys"],
-        self.config.get("compare_columns"))}
+        **config_kwargs(self, compare_cols="compare_columns"))}
 
 
 TableDiff = _simple_module(
@@ -1588,8 +1588,8 @@ def _apply_changes_process(self, im: ValueMap, ctx):
     return {"table": apply_changes(
         im["base"].data, im["changes"].data, self.config["keys"],
         ts_col=self.config.get("ts_column", "ts"),
-        op_col=self.config.get("op_column", "op"),
-        tiebreak_col=self.config.get("tiebreak_column"))}
+        **config_kwargs(self, op_col="op_column",
+                        tiebreak_col="tiebreak_column"))}
 
 
 TableApplyChanges = _simple_module(
@@ -1607,8 +1607,7 @@ TableWinsorize = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": winsorize(
         im["table"].data, self.config["columns"],
-        lower=self.config.get("lower", 0.01),
-        upper=self.config.get("upper", 0.99))},
+        **config_kwargs(self, "lower", "upper"))},
     doc="Percentile clipping (config: columns, lower, upper); one bounds "
         "aggregate + broadcast clip.",
 )
@@ -1619,7 +1618,7 @@ TableSkewReport = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": skew_report(
         im["table"].data, self.config["columns"],
-        top_n=self.config.get("top_n", 5))},
+        **config_kwargs(self, "top_n"))},
     doc="Heavy-key report for join planning (config: columns, top_n); "
         "all columns in one shuffle.",
 )
@@ -1630,7 +1629,7 @@ TableImputeNulls = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": impute_nulls(
         im["table"].data, self.config["columns"],
-        strategy=self.config.get("strategy", "mean"))},
+        **config_kwargs(self, "strategy"))},
     doc="Mean/median NULL fill (config: columns, strategy); one bounds "
         "aggregate + broadcast coalesce.",
 )
@@ -1653,7 +1652,7 @@ TableAssociationPairs = _simple_module(
     lambda self, im, ctx: {"table": association_pairs(
         im["table"].data, self.config["basket_column"],
         self.config["item_column"],
-        min_support=self.config.get("min_support", 2))},
+        **config_kwargs(self, "min_support"))},
     doc="Market-basket pair mining: support/confidence/lift via basket-"
         "keyed self-join (config: basket_column, item_column, min_support).",
 )
@@ -1665,7 +1664,7 @@ TableAssociationTriples = _simple_module(
     lambda self, im, ctx: {"table": association_triples(
         im["table"].data, self.config["basket_column"],
         self.config["item_column"],
-        min_support=self.config.get("min_support", 2))},
+        **config_kwargs(self, "min_support"))},
     doc="Apriori level-3 frequent triples with in-plan anti-monotone "
         "pruning (config: basket_column, item_column, min_support).",
 )
@@ -1678,8 +1677,7 @@ TableKthSmallest = _simple_module(
         "k": self.config["k"],
         "value": kth_smallest_scalable(
             im["table"].data, self.config["column"], self.config["k"],
-            n_bins=self.config.get("n_bins", 512),
-            final_limit=self.config.get("final_limit", 100_000))}},
+            **config_kwargs(self, "n_bins", "final_limit"))}},
     doc="Exact k-th smallest by histogram-refinement selection (config: "
         "column, k) — constant executor state, O(log) aggregate rounds.",
 )
@@ -1711,8 +1709,7 @@ TableQuantileBins = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": quantile_bins(
         im["table"].data, self.config["column"],
-        n_bins=self.config.get("n_bins", 10),
-        out_col=self.config.get("out_column"))},
+        **config_kwargs(self, "n_bins", out_col="out_column"))},
     doc="Equal-frequency quantile bin index per row (config: column, "
         "n_bins); one bounds aggregate + broadcast compare.",
 )
@@ -1723,9 +1720,8 @@ TableIncrementalAgg = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": incremental_agg_maintain(
         im["base_agg"].data, im["changes"].data, self.config["keys"],
-        op_col=self.config.get("op_column", "op"),
-        old_col=self.config.get("old_column", "old_val"),
-        new_col=self.config.get("new_column", "new_val"))},
+        **config_kwargs(self, op_col="op_column", old_col="old_column",
+                        new_col="new_column"))},
     doc="Fold a CDC change feed into a stored count/sum aggregate without "
         "rescanning the base (config: keys, op/old/new columns).",
 )
@@ -1733,9 +1729,8 @@ TableIncrementalAgg = _simple_module(
 def _drift_process(self, im: ValueMap, ctx):
     return {"table": drift_psi(
         im["ref"].data, im["cur"].data,
-        numeric_cols=self.config.get("numeric_columns"),
-        categorical_cols=self.config.get("categorical_columns"),
-        n_bins=self.config.get("n_bins", 10))}
+        **config_kwargs(self, "n_bins", numeric_cols="numeric_columns",
+                        categorical_cols="categorical_columns"))}
 
 
 TableDriftPsi = _simple_module(
@@ -1754,7 +1749,7 @@ TableChecksumRanges = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": checksum_ranges(
         im["table"].data, self.config["key_column"], self.config["columns"],
-        n_buckets=self.config.get("n_buckets", 64))},
+        **config_kwargs(self, "n_buckets"))},
     doc="Order-insensitive per-bucket content checksum (config: key_column, "
         "columns, n_buckets) for anti-entropy table comparison.",
 )
@@ -5979,7 +5974,7 @@ TableEntropy = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": shannon_entropy(
         im["table"].data, self.config["category_column"],
-        group_cols=self.config.get("group_columns"))},
+        **config_kwargs(self, group_cols="group_columns"))},
     doc="Shannon entropy (nats) of a categorical column, optionally "
         "per group.",
 )
@@ -6002,7 +5997,7 @@ TablePriceVolumeMix = _simple_module(
     lambda self, im, ctx: {"table": price_volume_mix(
         im["table"].data, self.config["group_columns"],
         self.config["revenue_column"], self.config["volume_column"],
-        period_col=self.config.get("period_column", "period"))},
+        **config_kwargs(self, period_col="period_column"))},
     doc="Price-volume-mix variance bridge between two periods (one "
         "conditional aggregate, decimal-exact sums).",
 )
@@ -6013,7 +6008,7 @@ TableOneHot = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": one_hot_encode(
         im["table"].data, self.config["column"],
-        values=self.config.get("values"))},
+        **config_kwargs(self, "values"))},
     doc="One-hot encoding of a low-cardinality categorical (map-only; "
         "pin `values` for a stable fitted schema).",
 )
@@ -6048,7 +6043,7 @@ TableLiftTable = _simple_module(
     lambda self, im, ctx: {"table": lift_table(
         im["table"].data, self.config["score_column"],
         self.config["outcome_column"],
-        n_bins=self.config.get("n_bins", 10))},
+        **config_kwargs(self, "n_bins"))},
     doc="Lift/gains table over equal-frequency score bins (no global "
         "sort; broadcast percentile bounds + one n_bins-row aggregate).",
 )
@@ -6060,9 +6055,7 @@ TableRakeWeights = _simple_module(
     lambda self, im, ctx: {"table": rake_weights(
         im["table"].data, self.config["row_column"],
         self.config["col_column"],
-        n_iter=self.config.get("n_iter", 3),
-        row_targets=self.config.get("row_targets"),
-        col_targets=self.config.get("col_targets"))},
+        **config_kwargs(self, "n_iter", "row_targets", "col_targets"))},
     doc="Raking / iterative proportional fitting (Deming & Stephan "
         "1940): alternating proportional cell-weight adjustment to "
         "target (default uniform) row/column margins; fixed iterations, "
@@ -6076,7 +6069,7 @@ TableUpliftQini = _simple_module(
     lambda self, im, ctx: {"table": uplift_qini(
         im["table"].data, self.config["score_column"],
         self.config["treat_column"], self.config["outcome_column"],
-        n_bins=self.config.get("n_bins", 10))},
+        **config_kwargs(self, "n_bins"))},
     doc="Qini/uplift curve (Radcliffe 2007): per-depth incremental "
         "conversions of treatment over exposure-scaled control, raw bin "
         "uplift, and gain over the random-targeting diagonal.",
@@ -6089,7 +6082,7 @@ TableCalibrationBins = _simple_module(
     lambda self, im, ctx: {"table": calibration_bins(
         im["table"].data, self.config["score_column"],
         self.config["outcome_column"],
-        n_bins=self.config.get("n_bins", 10))},
+        **config_kwargs(self, "n_bins"))},
     doc="Reliability-diagram bins: mean predicted vs observed rate per "
         "equal-width score bin + ECE contributions (two map-side-combined "
         "scans, broadcast bounds).",
@@ -6102,7 +6095,7 @@ TableIsotonicCalibration = _simple_module(
     lambda self, im, ctx: {"table": isotonic_calibration(
         im["table"].data, self.config["score_column"],
         self.config["outcome_column"],
-        n_bins=self.config.get("n_bins", 20))},
+        **config_kwargs(self, "n_bins"))},
     doc="Isotonic (PAV) probability calibration via the minimax closed "
         "form on equal-width score bins: least-squares non-decreasing "
         "score-to-rate mapping (Zadrozny & Elkan 2002).",
@@ -6114,7 +6107,7 @@ TableBenford = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": benford_report(
         im["table"].data, self.config["column"],
-        scale=self.config.get("scale", 100))},
+        **config_kwargs(self, "scale"))},
     doc="Benford first-digit audit: observed vs log10(1+1/d) expected "
         "frequencies per leading digit (fabrication screen).",
 )
@@ -6126,7 +6119,7 @@ TableLDiversity = _simple_module(
     lambda self, im, ctx: {"table": l_diversity_report(
         im["table"].data, self.config["quasi_columns"],
         self.config["sensitive_column"],
-        l=self.config.get("l", 2))},
+        **config_kwargs(self, "l"))},
     doc="l-diversity audit: distinct sensitive values per "
         "quasi-identifier class + violation flags.",
 )
@@ -6138,7 +6131,7 @@ TableTargetEncode = _simple_module(
     lambda self, im, ctx: {"table": target_encode(
         im["table"].data, self.config["category_column"],
         self.config["target_column"],
-        smoothing=self.config.get("smoothing", 10.0))},
+        **config_kwargs(self, "smoothing"))},
     doc="Smoothed target encoding for high-cardinality categoricals "
         "(decimal-exact, one category-key aggregate + broadcast join).",
 )
@@ -6150,7 +6143,7 @@ TableKAnonymity = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": k_anonymity_report(
         im["table"].data, self.config["quasi_columns"],
-        k=self.config.get("k", 5))},
+        **config_kwargs(self, "k"))},
     doc="k-anonymity audit: equivalence-class sizes over the "
         "quasi-identifiers + violation flags.",
 )
@@ -6161,7 +6154,7 @@ TableScaleFeatures = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": scale_features(
         im["table"].data, self.config["columns"],
-        methods=tuple(self.config.get("methods", ("minmax", "zscore"))))},
+        **config_kwargs(self, "methods"))},
     doc="Min-max and z-score feature scaling (one decimal-exact stats "
         "pass + broadcast map).",
 )
@@ -6209,7 +6202,7 @@ TableTCloseness = _simple_module(
     lambda self, im, ctx: {"table": t_closeness_report(
         im["table"].data, self.config["quasi_columns"],
         self.config["sensitive_column"],
-        t=self.config.get("t", 0.2))},
+        **config_kwargs(self, "t"))},
     doc="t-closeness audit: per-class total-variation distance of the "
         "sensitive distribution vs global (exact integer algebra).",
 )
@@ -6243,8 +6236,7 @@ TableLogRegGd = _simple_module(
     lambda self, im, ctx: {"table": logistic_regression_gd(
         im["table"].data, self.config["label_column"],
         self.config["feature_columns"],
-        iterations=self.config.get("iterations", 3),
-        lr=self.config.get("learning_rate", 1.0))},
+        **config_kwargs(self, "iterations", lr="learning_rate"))},
     doc="Binary logistic regression by full-batch gradient descent — "
         "one decimal-exact aggregate per epoch, broadcast weight row.",
 )
@@ -6255,8 +6247,7 @@ TableDpNoisyCounts = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": dp_noisy_counts(
         im["table"].data, self.config["group_columns"],
-        epsilon=self.config.get("epsilon", 1.0),
-        salt=self.config.get("salt", "dp"))},
+        **config_kwargs(self, "epsilon", "salt"))},
     doc="ε-DP Laplace-mechanism count histogram with derived "
         "(reproducible) noise — keep the salt secret in a real release.",
 )
@@ -6268,9 +6259,7 @@ TableBootstrapCi = _simple_module(
     lambda self, im, ctx: {"table": bootstrap_ci_mean(
         im["table"].data, self.config["value_column"],
         self.config["id_column"],
-        b_resamples=self.config.get("b_resamples", 100),
-        level=self.config.get("level", 0.95),
-        salt=self.config.get("salt", "boot"))},
+        **config_kwargs(self, "b_resamples", "level", "salt"))},
     doc="Poisson-bootstrap percentile CI for the mean — all B resamples "
         "from ONE aggregate (map-side Poisson(1) weights).",
 )
@@ -6281,8 +6270,7 @@ TableGmmEm = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": gmm_em_1d(
         im["table"].data, self.config["value_column"],
-        iterations=self.config.get("iterations", 2),
-        init=tuple(self.config.get("init", (0.5, 4.0, 1.0, 1.0, 0.5))))},
+        **config_kwargs(self, "init", "iterations"))},
     doc="Two-component 1-D Gaussian mixture by EM — one decimal-exact "
         "aggregate per round, broadcast parameter row.",
 )
@@ -6294,7 +6282,7 @@ TableNdcg = _simple_module(
     lambda self, im, ctx: {"table": ndcg_at_k(
         im["table"].data, self.config["query_column"],
         self.config["score_column"], self.config["relevance_column"],
-        self.config["id_column"], k=self.config.get("k", 5))},
+        self.config["id_column"], **config_kwargs(self, "k"))},
     doc="NDCG@k + MRR@k per query group (graded-relevance ranking "
         "quality).",
 )
@@ -6306,7 +6294,7 @@ TableRidgeNormal = _simple_module(
     lambda self, im, ctx: {"table": ridge_regression_normal(
         im["table"].data, self.config["target_column"],
         self.config["feature_columns"],
-        lam=self.config.get("lambda", 1.0))},
+        **config_kwargs(self, lam="lambda"))},
     doc="Ridge (L2) regression by distributed normal equations — the "
         "same one-aggregate Gram shape as OLS, nonsingular for any λ>0.",
 )
@@ -6318,7 +6306,7 @@ TableKfoldCvOls = _simple_module(
     lambda self, im, ctx: {"table": kfold_cv_ols(
         im["table"].data, self.config["target_column"],
         self.config["feature_columns"], self.config["id_column"],
-        k=self.config.get("k", 5))},
+        **config_kwargs(self, "k"))},
     doc="K-fold cross-validated OLS from ONE Gram aggregate "
         "(train Gram = total − fold); per-fold test RMSE/R².",
 )
@@ -6331,9 +6319,7 @@ TableBootstrapAbDiff = _simple_module(
         im["table"].data, self.config["value_column"],
         self.config["id_column"], self.config["group_column"],
         self.config["group_a"], self.config["group_b"],
-        b_resamples=self.config.get("b_resamples", 100),
-        level=self.config.get("level", 0.95),
-        salt=self.config.get("salt", "boot"))},
+        **config_kwargs(self, "b_resamples", "level", "salt"))},
     doc="Poisson-bootstrap percentile CI for the A/B difference in "
         "means — all B resampled diffs from one (resample, group) "
         "aggregate.",
@@ -6414,7 +6400,7 @@ TableChi2Bh = _simple_module(
     lambda self, im, ctx: {"table": chi2_gof_bh(
         im["table"].data, self.config["group_column"],
         self.config["category_column"],
-        alpha=self.config.get("alpha", 0.05))},
+        **config_kwargs(self, "alpha"))},
     doc="Per-group chi2 goodness-of-fit vs the pooled distribution with "
         "Benjamini-Hochberg FDR adjustment across groups.",
 )
@@ -6460,7 +6446,7 @@ TableYuenTtest = _simple_module(
         im["table"].data, self.config["group_column"],
         self.config["value_column"], self.config["group_a"],
         self.config["group_b"],
-        trim=self.config.get("trim", 0.2))},
+        **config_kwargs(self, "trim"))},
     doc="Yuen's trimmed-mean t-test: outlier-robust two-sample location "
         "comparison (exact grid trimming + winsorized variances).",
 )
@@ -6548,7 +6534,7 @@ TableCcc = _simple_module(
     lambda self, im, ctx: {"table": concordance_ccc(
         im["table"].data, self.config["x_column"],
         self.config["y_column"],
-        value_scale=self.config.get("value_scale", 2))},
+        **config_kwargs(self, "value_scale"))},
     doc="Lin's concordance correlation (agreement incl. scale/location "
         "bias) from one exact-decimal aggregate.",
 )
@@ -6582,8 +6568,7 @@ TableBhFdr = _simple_module(
     {"table": TABLE},
     lambda self, im, ctx: {"table": bh_fdr(
         im["table"].data,
-        self.config.get("p_column", "p_value"),
-        alpha=self.config.get("alpha", 0.05))},
+        **config_kwargs(self, "alpha", p_col="p_column"))},
     doc="Benjamini-Hochberg FDR step-up over a family of p-values: "
         "adjusted p + reject flags, range-partitioned rank/suffix-min "
         "(no single-task window).",
@@ -6597,7 +6582,7 @@ TableCupedReadout = _simple_module(
         im["table"].data, self.config["group_column"],
         self.config["x_column"], self.config["y_column"],
         self.config["group_a"], self.config["group_b"],
-        value_scale=self.config.get("value_scale", 2))},
+        **config_kwargs(self, "value_scale"))},
     doc="CUPED variance-reduced A/B READOUT (Deng et al. 2013): per-arm "
         "adjusted means, adjusted-diff z + erfc p, 100*rho^2 variance "
         "reduction from one exact-decimal conditional scan (the decision "
@@ -6613,8 +6598,7 @@ TableDiffInDiff = _simple_module(
         self.config["period_column"], self.config["y_column"],
         self.config["group_treat"], self.config["group_control"],
         self.config["period_pre"], self.config["period_post"],
-        value_scale=self.config.get("value_scale", 2),
-        segment_col=self.config.get("segment_column"))},
+        **config_kwargs(self, "value_scale", segment_col="segment_column"))},
     doc="Difference-in-differences readout for staged rollouts: the "
         "treatment shift net of the control group's secular trend, with "
         "the 4-cell large-sample z and erfc p from one exact-decimal "
@@ -6629,7 +6613,7 @@ TableRatioMetricDelta = _simple_module(
         im["table"].data, self.config["group_column"],
         self.config["num_column"], self.config["den_column"],
         self.config["group_a"], self.config["group_b"],
-        value_scale=self.config.get("value_scale", 2))},
+        **config_kwargs(self, "value_scale"))},
     doc="Ratio-of-sums metric A/B test with delta-method variance (Deng "
         "et al. 2018): per-arm ratio, SE, z and erfc p from one "
         "exact-decimal conditional scan over the randomization units.",
@@ -6643,10 +6627,8 @@ TablePowerMde = _simple_module(
         im["table"].data, self.config["group_column"],
         self.config["y_column"],
         self.config["group_a"], self.config["group_b"],
-        alpha=self.config.get("alpha", 0.05),
-        power=self.config.get("power", 0.80),
-        target_rel_effect=self.config.get("target_rel_effect", 0.10),
-        value_scale=self.config.get("value_scale", 2))},
+        **config_kwargs(self, "alpha", "power", "target_rel_effect",
+                        "value_scale"))},
     doc="Experiment power/MDE planning: minimum detectable effect at the "
         "current sample + required per-arm n for a target relative lift, "
         "from one exact-decimal conditional scan (literal z quantiles).",
@@ -6661,7 +6643,7 @@ TableMsprt = _simple_module(
         self.config["time_column"], self.config["y_column"],
         self.config["group_a"], self.config["group_b"],
         tau=self.config["tau"],
-        value_scale=self.config.get("value_scale", 2))},
+        **config_kwargs(self, "value_scale"))},
     doc="Mixture SPRT always-valid p-value sequence (Johari et al. 2017) "
         "for continuously-monitored A/B tests: per-bucket cumulative "
         "log-likelihood ratio + non-increasing p, safe at every look.",
@@ -6674,10 +6656,7 @@ TableConformalInterval = _simple_module(
     lambda self, im, ctx: {"table": conformal_interval(
         im["table"].data, self.config["x_column"],
         self.config["y_column"], self.config["key_columns"],
-        alpha=self.config.get("alpha", 0.1),
-        train_pct=self.config.get("train_pct", 50),
-        cal_pct=self.config.get("cal_pct", 25),
-        salt=self.config.get("salt", "conf"))},
+        **config_kwargs(self, "alpha", "train_pct", "cal_pct", "salt"))},
     doc="Split-conformal prediction interval (Lei et al. 2018): "
         "distribution-free ±q-hat regression band with finite-sample "
         ">=1-alpha coverage; OLS base fit, order-statistic calibration.",
@@ -6692,7 +6671,7 @@ TableTostEquivalence = _simple_module(
         self.config["value_column"],
         self.config["group_a"], self.config["group_b"],
         self.config["margin"],
-        value_scale=self.config.get("value_scale", 2))},
+        **config_kwargs(self, "value_scale"))},
     doc="TOST equivalence test (Schuirmann 1987): two one-sided "
         "large-sample z tests against +-margin; equivalence only when "
         "both reject (p_tost = max of the one-sided p values).",
@@ -6705,7 +6684,7 @@ TableIvWald = _simple_module(
     lambda self, im, ctx: {"table": iv_wald(
         im["table"].data, self.config["instrument_column"],
         self.config["treat_column"], self.config["y_column"],
-        value_scale=self.config.get("value_scale", 2))},
+        **config_kwargs(self, "value_scale"))},
     doc="Instrumental-variable Wald/LATE estimator for a binary "
         "instrument: reduced-form / first-stage with delta-method SE "
         "(non-compliance-robust causal effect).",
@@ -6718,7 +6697,7 @@ TableStratifiedAte = _simple_module(
     lambda self, im, ctx: {"table": stratified_ate(
         im["table"].data, self.config["treat_column"],
         self.config["y_column"], self.config["covariate_column"],
-        n_strata=self.config.get("n_strata", 5))},
+        **config_kwargs(self, "n_strata"))},
     doc="Subclassification ATE/ATT (Cochran 1968; Rosenbaum & Rubin "
         "1984): within-stratum treated-control differences averaged "
         "with size (ATE) / treated (ATT) weights; common-support drop.",
@@ -6731,7 +6710,7 @@ TableSrmCheck = _simple_module(
     lambda self, im, ctx: {"table": srm_check(
         im["table"].data, self.config["group_column"],
         self.config["expected"],
-        alpha=self.config.get("alpha", 0.001))},
+        **config_kwargs(self, "alpha"))},
     doc="Sample-ratio-mismatch gate: chi2 GOF of assignment counts vs "
         "the designed split (df=1 exact erfc p).",
 )

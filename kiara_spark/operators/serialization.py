@@ -16,12 +16,11 @@ from __future__ import annotations
 import json
 import pickle
 
-from ..modules import KiaraModule
+from ..modules import STRING, TABLE, KiaraModule, _simple_module
 from ..operations import Operation
 from ..values import ValueMap
 
 BYTES = {"type": "bytes"}
-STRING = {"type": "string"}
 ANY = {"type": "any"}
 
 
@@ -123,20 +122,12 @@ class LoadInternalModel(DeserializeValueModule):
         return ctor(**data.get("data", {}))
 
 
-class DeserializeFile(KiaraModule):
-    """Reference ``filesystem.py:87-133`` (deserialize.file): rehydrate a
-    stored file/dataset value from a warehouse path."""
-
-    _module_type_name = "deserialize.file"
-
-    def create_inputs_schema(self):
-        return {"path": STRING}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": context.spark.read.parquet(inputs["path"].data)}
+DeserializeFile = _simple_module(
+    "deserialize.file", {"path": STRING}, {"table": TABLE},
+    lambda self, im, ctx: {"table": ctx.spark.read.parquet(im["path"].data)},
+    doc="""Reference ``filesystem.py:87-133`` (deserialize.file): rehydrate a
+    stored file/dataset value from a warehouse path.""",
+)
 
 
 MODULES = [UnpickleValue, LoadBytes, LoadString, DeserializeFromJson,

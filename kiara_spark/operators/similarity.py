@@ -27,9 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..modules import KiaraModule
+from ..modules import TABLE, _simple_module, config_kwargs
 from ..operations import Operation
-from ..values import ValueMap
 
 
 def _to_double(arr: Column) -> Column:
@@ -905,25 +904,21 @@ def pq_topk_adc(
                 F.col("rank").cast("bigint").alias("rank")))
 
 
-class EmbeddingPQEncode(KiaraModule):
-    """Product-quantization encode against a seed or supplied codebook."""
+def _embedding_pq_encode_process(self, im, ctx):
+    df = im["table"].data
+    id_col = self.config.get("id_column", "vec_id")
+    vec_col = self.config.get("vector_column", "embedding")
+    codebook = self.config.get("codebook") or pq_seed_codebook(
+        df, id_col, vec_col,
+        **config_kwargs(self, "m", "k"))
+    return {"table": pq_encode(df, codebook, vec_col, id_col)}
 
-    _module_type_name = "embedding.pq_encode"
 
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        df = inputs["table"].data
-        id_col = self.config.get("id_column", "vec_id")
-        vec_col = self.config.get("vector_column", "embedding")
-        codebook = self.config.get("codebook") or pq_seed_codebook(
-            df, id_col, vec_col,
-            m=self.config.get("m", 4), k=self.config.get("k", 16))
-        return {"table": pq_encode(df, codebook, vec_col, id_col)}
+EmbeddingPQEncode = _simple_module(
+    "embedding.pq_encode", {"table": TABLE}, {"table": TABLE},
+    _embedding_pq_encode_process,
+    doc="Product-quantization encode against a seed or supplied codebook.",
+)
 
 
 def embedding_centroids(
@@ -1053,95 +1048,57 @@ def pca_top_component(
             .orderBy("pos"))
 
 
-class EmbeddingCentroids(KiaraModule):
-    _module_type_name = "embedding.centroids"
+EmbeddingCentroids = _simple_module(
+    "embedding.centroids", {"table": TABLE}, {"centroids": TABLE},
+    lambda self, im, ctx: {"centroids": embedding_centroids(
+        im["table"].data,
+        **config_kwargs(self, group_col="group_column",
+                        vec_col="vector_column"),
+    )},
+)
 
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
+EmbeddingNormalize = _simple_module(
+    "embedding.normalize", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": normalize_embeddings(
+        im["table"].data,
+        **config_kwargs(self, "dims", vec_col="vector_column"),
+    )},
+)
 
-    def create_outputs_schema(self):
-        return {"centroids": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"centroids": embedding_centroids(
-            inputs["table"].data,
-            group_col=self.config.get("group_column", "label"),
-            vec_col=self.config.get("vector_column", "embedding"),
-        )}
-
-
-class EmbeddingNormalize(KiaraModule):
-    _module_type_name = "embedding.normalize"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": normalize_embeddings(
-            inputs["table"].data,
-            vec_col=self.config.get("vector_column", "embedding"),
-            dims=self.config.get("dims"),
-        )}
+EmbeddingQuantizeInt8 = _simple_module(
+    "embedding.quantize_int8", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": quantize_embeddings_int8(
+        im["table"].data,
+        **config_kwargs(self, "levels", vec_col="vector_column"),
+    )},
+)
 
 
-class EmbeddingQuantizeInt8(KiaraModule):
-    _module_type_name = "embedding.quantize_int8"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": quantize_embeddings_int8(
-            inputs["table"].data,
-            vec_col=self.config.get("vector_column", "embedding"),
-            levels=self.config.get("levels", 256),
-        )}
+def _similarity_top_k_process(self, im, ctx):
+    method = self.config.get("method", "bruteforce")
+    fn = {"bruteforce": cosine_topk_bruteforce, "ivf": cosine_topk_ivf,
+          "pandas": knn_join_pandas, "rplsh": cosine_topk_rplsh}[method]
+    extra = {"ivf": {"bucket_col": "bucket_column"},
+             "rplsh": {"n_planes": "n_planes"}}.get(method, {})
+    return {"neighbors": fn(im["corpus"].data, im["queries"].data,
+                            **config_kwargs(self, "k", **extra))}
 
 
-class SimilarityTopK(KiaraModule):
-    _module_type_name = "embedding.similarity.topk"
+SimilarityTopK = _simple_module(
+    "embedding.similarity.topk",
+    {"corpus": TABLE, "queries": TABLE},
+    {"neighbors": TABLE},
+    _similarity_top_k_process,
+)
 
-    def create_inputs_schema(self):
-        return {"corpus": {"type": "table"}, "queries": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"neighbors": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        method = self.config.get("method", "bruteforce")
-        fn = {"bruteforce": cosine_topk_bruteforce, "ivf": cosine_topk_ivf,
-              "pandas": knn_join_pandas, "rplsh": cosine_topk_rplsh}[method]
-        kwargs = dict(k=self.config.get("k", 5))
-        if method == "ivf":
-            kwargs["bucket_col"] = self.config.get("bucket_column", "label")
-        if method == "rplsh":
-            kwargs["n_planes"] = self.config.get("n_planes", 8)
-        return {"neighbors": fn(inputs["corpus"].data, inputs["queries"].data, **kwargs)}
-
-
-class EmbeddingNearDup(KiaraModule):
-    _module_type_name = "table.dedup.embedding_cosine"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"pairs": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"pairs": embedding_neardup_pairs(
-            inputs["table"].data,
-            threshold=self.config.get("threshold", 0.9),
-            id_col=self.config.get("id_column", "vec_id"),
-            vec_col=self.config.get("vector_column", "embedding"),
-            bucket_col=self.config.get("bucket_column", "label"),
-        )}
+EmbeddingNearDup = _simple_module(
+    "table.dedup.embedding_cosine", {"table": TABLE}, {"pairs": TABLE},
+    lambda self, im, ctx: {"pairs": embedding_neardup_pairs(
+        im["table"].data,
+        **config_kwargs(self, "threshold", id_col="id_column",
+                        vec_col="vector_column", bucket_col="bucket_column"),
+    )},
+)
 
 
 def kmeans_lloyd(
@@ -1415,44 +1372,24 @@ def dbscan(
                            F.lit(-1)).cast("bigint").alias("cluster")))
 
 
-class EmbeddingDbscan(KiaraModule):
-    """Exact grid-blocked DBSCAN density clustering (see dbscan)."""
+EmbeddingDbscan = _simple_module(
+    "embedding.dbscan", {"table": TABLE}, {"assignments": TABLE},
+    lambda self, im, ctx: {"assignments": dbscan(
+        im["table"].data,
+        eps=self.config["eps"],
+        **config_kwargs(self, "min_pts", id_col="id_column",
+                        vec_col="vector_column"))},
+    doc="Exact grid-blocked DBSCAN density clustering (see dbscan).",
+)
 
-    _module_type_name = "embedding.dbscan"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"assignments": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"assignments": dbscan(
-            inputs["table"].data,
-            eps=self.config["eps"],
-            min_pts=self.config.get("min_pts", 4),
-            id_col=self.config.get("id_column", "vec_id"),
-            vec_col=self.config.get("vector_column", "embedding"))}
-
-
-class EmbeddingKMeans(KiaraModule):
-    """Fixed-iteration deterministic Lloyd k-means (see kmeans_lloyd)."""
-
-    _module_type_name = "embedding.kmeans"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"assignments": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"assignments": kmeans_lloyd(
-            inputs["table"].data,
-            k=self.config.get("k", 4),
-            n_iter=self.config.get("n_iter", 2),
-            id_col=self.config.get("id_column", "vec_id"),
-            vec_col=self.config.get("vector_column", "embedding"))}
+EmbeddingKMeans = _simple_module(
+    "embedding.kmeans", {"table": TABLE}, {"assignments": TABLE},
+    lambda self, im, ctx: {"assignments": kmeans_lloyd(
+        im["table"].data,
+        **config_kwargs(self, "k", "n_iter", id_col="id_column",
+                        vec_col="vector_column"))},
+    doc="Fixed-iteration deterministic Lloyd k-means (see kmeans_lloyd).",
+)
 
 
 def semantic_dedup(
@@ -1514,144 +1451,82 @@ def semantic_dedup(
     )
 
 
-class EmbeddingSemanticDedup(KiaraModule):
-    """SemDeDup: k-means clusters -> within-cluster cosine prune
-    (see semantic_dedup)."""
-
-    _module_type_name = "table.dedup.semantic"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": semantic_dedup(
-            inputs["table"].data,
-            k=self.config.get("k", 4),
-            n_iter=self.config.get("n_iter", 2),
-            threshold=self.config.get("threshold", 0.9),
-            id_col=self.config.get("id_column", "vec_id"),
-            vec_col=self.config.get("vector_column", "embedding"))}
+EmbeddingSemanticDedup = _simple_module(
+    "table.dedup.semantic", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": semantic_dedup(
+        im["table"].data,
+        **config_kwargs(self, "k", "n_iter", "threshold", id_col="id_column",
+                        vec_col="vector_column"))},
+    doc="""SemDeDup: k-means clusters -> within-cluster cosine prune
+    (see semantic_dedup).""",
+)
 
 
-class EmbeddingPQTopK(KiaraModule):
-    """ADC top-k retrieval over PQ codes (serving half of IVF-PQ)."""
-
-    _module_type_name = "embedding.pq_topk"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}, "queries": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        df = inputs["table"].data
-        id_col = self.config.get("id_column", "vec_id")
-        vec_col = self.config.get("vector_column", "embedding")
-        codebook = self.config.get("codebook") or pq_seed_codebook(
-            df, id_col, vec_col,
-            m=self.config.get("m", 4), k=self.config.get("codebook_k", 16))
-        return {"table": pq_topk_adc(
-            df, inputs["queries"].data, codebook,
-            k=self.config.get("k", 5), vec_col=vec_col, id_col=id_col)}
+def _embedding_pq_top_k_process(self, im, ctx):
+    df = im["table"].data
+    id_col = self.config.get("id_column", "vec_id")
+    vec_col = self.config.get("vector_column", "embedding")
+    codebook = self.config.get("codebook") or pq_seed_codebook(
+        df, id_col, vec_col,
+        **config_kwargs(self, "m", k="codebook_k"))
+    return {"table": pq_topk_adc(
+        df, im["queries"].data, codebook, vec_col=vec_col, id_col=id_col,
+        **config_kwargs(self, "k"))}
 
 
-class EmbeddingPcaTop(KiaraModule):
-    _module_type_name = "embedding.pca_top_component"
+EmbeddingPQTopK = _simple_module(
+    "embedding.pq_topk", {"table": TABLE, "queries": TABLE}, {"table": TABLE},
+    _embedding_pq_top_k_process,
+    doc="ADC top-k retrieval over PQ codes (serving half of IVF-PQ).",
+)
 
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
+EmbeddingPcaTop = _simple_module(
+    "embedding.pca_top_component", {"table": TABLE}, {"component": TABLE},
+    lambda self, im, ctx: {"component": pca_top_component(
+        im["table"].data,
+        **config_kwargs(self, "iterations", vec_col="vector_column",
+                        id_col="id_column"))},
+)
 
-    def create_outputs_schema(self):
-        return {"component": {"type": "table"}}
+EmbeddingKMeansSilhouette = _simple_module(
+    "embedding.kmeans_silhouette", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": kmeans_silhouette(
+        im["table"].data,
+        **config_kwargs(self, "k", "n_iter", id_col="id_column",
+                        vec_col="vector_column"))},
+    doc="Simplified (centroid-based) silhouette for the Lloyd fit.",
+)
 
-    def process(self, inputs: ValueMap, context):
-        return {"component": pca_top_component(
-            inputs["table"].data,
-            vec_col=self.config.get("vector_column", "embedding"),
-            id_col=self.config.get("id_column", "vec_id"),
-            iterations=self.config.get("iterations", 3))}
+EmbeddingKnnClassify = _simple_module(
+    "embedding.knn_classify",
+    {"corpus": TABLE, "queries": TABLE},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": knn_classify(
+        im["corpus"].data, im["queries"].data,
+        **config_kwargs(self, "k", id_col="id_column", vec_col="vector_column",
+                        label_col="label_column"))},
+    doc="k-NN majority-vote classification over embeddings.",
+)
 
+EmbeddingTopkRecall = _simple_module(
+    "embedding.topk_recall",
+    {"exact": TABLE, "approx": TABLE},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": topk_recall(
+        im["exact"].data, im["approx"].data)},
+    doc="Recall@k of an approximate top-k result vs exact ground truth.",
+)
 
-class EmbeddingKMeansSilhouette(KiaraModule):
-    """Simplified (centroid-based) silhouette for the Lloyd fit."""
-
-    _module_type_name = "embedding.kmeans_silhouette"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": kmeans_silhouette(
-            inputs["table"].data,
-            k=self.config.get("k", 4),
-            n_iter=self.config.get("n_iter", 2),
-            id_col=self.config.get("id_column", "vec_id"),
-            vec_col=self.config.get("vector_column", "embedding"))}
-
-
-class EmbeddingKnnClassify(KiaraModule):
-    """k-NN majority-vote classification over embeddings."""
-
-    _module_type_name = "embedding.knn_classify"
-
-    def create_inputs_schema(self):
-        return {"corpus": {"type": "table"}, "queries": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": knn_classify(
-            inputs["corpus"].data, inputs["queries"].data,
-            k=self.config.get("k", 5),
-            id_col=self.config.get("id_column", "vec_id"),
-            vec_col=self.config.get("vector_column", "embedding"),
-            label_col=self.config.get("label_column", "label"))}
-
-
-class EmbeddingTopkRecall(KiaraModule):
-    """Recall@k of an approximate top-k result vs exact ground truth."""
-
-    _module_type_name = "embedding.topk_recall"
-
-    def create_inputs_schema(self):
-        return {"exact": {"type": "table"}, "approx": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": topk_recall(
-            inputs["exact"].data, inputs["approx"].data)}
-
-
-class EmbeddingTruncatedDimRecall(KiaraModule):
-    """Matryoshka dimension-ablation eval: recall@k of first-``dims``
-    prefix search against full-dimension exact top-k."""
-
-    _module_type_name = "embedding.truncated_dim_recall"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": truncated_dim_recall(
-            inputs["table"].data,
-            dims=self.config.get("dims", 16),
-            k=self.config.get("k", 5),
-            query_filter=self.config.get("query_filter"),
-            id_col=self.config.get("id_column", "vec_id"),
-            vec_col=self.config.get("vector_column", "embedding"))}
+EmbeddingTruncatedDimRecall = _simple_module(
+    "embedding.truncated_dim_recall", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": truncated_dim_recall(
+        im["table"].data,
+        dims=self.config.get("dims", 16),
+        **config_kwargs(self, "k", "query_filter", id_col="id_column",
+                        vec_col="vector_column"))},
+    doc="""Matryoshka dimension-ablation eval: recall@k of first-``dims``
+    prefix search against full-dimension exact top-k.""",
+)
 
 
 MODULES = [SimilarityTopK, EmbeddingNearDup, EmbeddingCentroids,

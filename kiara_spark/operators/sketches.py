@@ -36,9 +36,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..modules import KiaraModule
+from ..modules import TABLE, _simple_module, config_kwargs
 from ..operations import Operation
-from ..values import ValueMap
 
 
 def bitmap_distinct_partials(
@@ -211,90 +210,74 @@ def cms_estimate(
     return out.select(*queries.columns, est.alias("est"))
 
 
-class TableCmsFrequency(KiaraModule):
-    """Count-min frequency sketch build + estimate (see cms_build)."""
-
-    _module_type_name = "table.frequency.cms"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}, "queries": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"estimates": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        cfg = self.config
-        width = int(cfg.get("width", 1024))
-        depth = int(cfg.get("depth", 4))
-        key = cfg["key_column"]
-        sketch = cms_build(inputs["table"].data, key, width, depth)
-        return {"estimates": cms_estimate(
-            sketch, inputs["queries"].data, cfg.get("query_key_column", key),
-            width, depth)}
+def _table_cms_frequency_process(self, im, ctx):
+    cfg = self.config
+    width = int(cfg.get("width", 1024))
+    depth = int(cfg.get("depth", 4))
+    key = cfg["key_column"]
+    sketch = cms_build(im["table"].data, key, width, depth)
+    return {"estimates": cms_estimate(
+        sketch, im["queries"].data, cfg.get("query_key_column", key),
+        width, depth)}
 
 
-class TableDistinctRollupBitmap(KiaraModule):
-    """Exact re-aggregatable distinct counts via bitmap partials."""
-
-    _module_type_name = "table.distinct_rollup.bitmap"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"partials": {"type": "table"}, "fine": {"type": "table"},
-                "coarse": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        partials, fine, coarse = bitmap_distinct_rollup(
-            inputs["table"].data,
-            fine_keys=self.config["fine_keys"],
-            coarse_keys=self.config["coarse_keys"],
-            id_col=self.config.get("id_column", "user_id"),
-        )
-        return {"partials": partials, "fine": fine, "coarse": coarse}
+TableCmsFrequency = _simple_module(
+    "table.frequency.cms",
+    {"table": TABLE, "queries": TABLE},
+    {"estimates": TABLE},
+    _table_cms_frequency_process,
+    doc="Count-min frequency sketch build + estimate (see cms_build).",
+)
 
 
-class TableDistinctRollupHll(KiaraModule):
-    """Approximate re-aggregatable distinct counts via HLL++ partials."""
-
-    _module_type_name = "table.distinct_rollup.hll"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"partials": {"type": "table"}, "rollup": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        partials = hll_distinct_partials(
-            inputs["table"].data,
-            keys=self.config["fine_keys"],
-            id_col=self.config.get("id_column", "user_id"),
-            lgk=self.config.get("lgk", 14),
-        )
-        rollup = hll_distinct_rollup(partials, self.config["coarse_keys"])
-        return {"partials": partials, "rollup": rollup}
+def _table_distinct_rollup_bitmap_process(self, im, ctx):
+    partials, fine, coarse = bitmap_distinct_rollup(
+        im["table"].data,
+        fine_keys=self.config["fine_keys"],
+        coarse_keys=self.config["coarse_keys"],
+        id_col=self.config.get("id_column", "user_id"),
+    )
+    return {"partials": partials, "fine": fine, "coarse": coarse}
 
 
-class TableOverlapTheta(KiaraModule):
-    """Pairwise set-overlap estimates between groups via theta sketches."""
+TableDistinctRollupBitmap = _simple_module(
+    "table.distinct_rollup.bitmap",
+    {"table": TABLE},
+    {"partials": TABLE, "fine": TABLE, "coarse": TABLE},
+    _table_distinct_rollup_bitmap_process,
+    doc="Exact re-aggregatable distinct counts via bitmap partials.",
+)
 
-    _module_type_name = "table.overlap.theta"
 
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
+def _table_distinct_rollup_hll_process(self, im, ctx):
+    partials = hll_distinct_partials(
+        im["table"].data,
+        keys=self.config["fine_keys"],
+        id_col=self.config.get("id_column", "user_id"),
+        **config_kwargs(self, "lgk"),
+    )
+    rollup = hll_distinct_rollup(partials, self.config["coarse_keys"])
+    return {"partials": partials, "rollup": rollup}
 
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
 
-    def process(self, inputs: ValueMap, context):
-        return {"table": theta_overlap_pairs(
-            inputs["table"].data,
-            group_col=self.config["group_column"],
-            id_col=self.config.get("id_column", "user_id"),
-            lgk=self.config.get("lgk", 14),
-        )}
+TableDistinctRollupHll = _simple_module(
+    "table.distinct_rollup.hll",
+    {"table": TABLE},
+    {"partials": TABLE, "rollup": TABLE},
+    _table_distinct_rollup_hll_process,
+    doc="Approximate re-aggregatable distinct counts via HLL++ partials.",
+)
+
+TableOverlapTheta = _simple_module(
+    "table.overlap.theta", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": theta_overlap_pairs(
+        im["table"].data,
+        group_col=self.config["group_column"],
+        id_col=self.config.get("id_column", "user_id"),
+        **config_kwargs(self, "lgk"),
+    )},
+    doc="Pairwise set-overlap estimates between groups via theta sketches.",
+)
 
 
 MODULES = [TableDistinctRollupBitmap, TableDistinctRollupHll, TableOverlapTheta,

@@ -30,9 +30,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..modules import KiaraModule, ModuleCharacteristics
+from ..modules import (DICT, STRING, TABLE, ModuleCharacteristics, _cfg,
+                       _simple_module, config_kwargs)
 from ..operations import Operation
-from ..values import ValueMap
 
 # ---------------------------------------------------------------------------
 # pure functions
@@ -936,47 +936,6 @@ def observe_metrics(df: DataFrame, metrics: dict):
 # module classes (orchestration surface)
 # ---------------------------------------------------------------------------
 
-TABLE = {"type": "table"}
-STRING = {"type": "string"}
-DICT = {"type": "dict"}
-
-
-def _simple_module(module_type: str, inputs: dict, outputs: dict, fn, doc: str = "",
-                   characteristics: ModuleCharacteristics | None = None):
-    """Factory: declaratively minted operator module (mirrors the reference's
-    dynamically-discovered method families, ``filter.py:22-47`` etc.)."""
-
-    class _Mod(KiaraModule):
-        _module_type_name = module_type
-        __doc__ = doc
-
-        def create_inputs_schema(self):
-            return inputs
-
-        def create_outputs_schema(self):
-            return outputs
-
-        def process(self, im: ValueMap, context):
-            return fn(self, im, context)
-
-    if characteristics:
-        _Mod._characteristics = characteristics
-    _Mod.__name__ = "Mod_" + module_type.replace(".", "_")
-    return _Mod
-
-
-def _cfg(self, im: ValueMap, *names):
-    """Resolve params from module config first, then inputs."""
-    out = []
-    for n in names:
-        if n in self.config:
-            out.append(self.config[n])
-        elif n in im:
-            out.append(im[n].data)
-        else:
-            out.append(None)
-    return out
-
 
 def _table_from_file_process(self, im, ctx):
     # accepts either a raw path string or a `file` value (the reference's
@@ -1257,7 +1216,7 @@ TableVacuum = _simple_module(
     "table.vacuum.snapshots",
     {"path": STRING}, {"report": DICT},
     lambda self, im, ctx: {"report": vacuum_snapshots(
-        im["path"].data, keep_latest=self.config.get("keep_latest", 2))},
+        im["path"].data, **config_kwargs(self, "keep_latest"))},
     doc="Retention: keep N newest snapshot dirs, delete older (driver-side).",
     characteristics=ModuleCharacteristics(is_idempotent=False),
 )
@@ -1274,8 +1233,7 @@ TableAnonymize = _simple_module(
     {"table": TABLE}, {"table": TABLE},
     lambda self, im, ctx: {"table": anonymize_columns(
         im["table"].data, self.config["hash_columns"],
-        drop_cols=self.config.get("drop_columns"),
-        salt=self.config.get("salt", ""))},
+        **config_kwargs(self, "salt", drop_cols="drop_columns"))},
     doc="Pseudonymize: salted-md5 quasi-identifiers, drop direct "
         "identifiers (config: hash_columns, drop_columns, salt).",
 )
@@ -1285,8 +1243,7 @@ TableAddRowIds = _simple_module(
     {"table": TABLE}, {"table": TABLE},
     lambda self, im, ctx: {"table": add_contiguous_row_ids(
         im["table"].data, self.config["order_column"],
-        id_col=self.config.get("id_column", "row_id"),
-        n_buckets=self.config.get("n_buckets", 32))},
+        **config_kwargs(self, "n_buckets", id_col="id_column"))},
     doc="Contiguous global row ids without a single-partition window "
         "(config: order_column [unique], id_column, n_buckets).",
 )
@@ -1297,7 +1254,7 @@ TableBackfill = _simple_module(
     lambda self, im, ctx: {"report": backfill_by_partition(
         im["table"].data, im["path"].data,
         partition_col=self.config["partition_column"],
-        overwrite_partitions=self.config.get("overwrite_partitions"))},
+        **config_kwargs(self, "overwrite_partitions"))},
     doc="Idempotent partitioned backfill: write missing partition dirs only "
         "(config: partition_column, overwrite_partitions).",
     characteristics=ModuleCharacteristics(is_idempotent=False),
@@ -1308,8 +1265,7 @@ TableTimeTravel = _simple_module(
     {"path": STRING}, {"table": TABLE},
     lambda self, im, ctx: {"table": time_travel_snapshot(
         ctx.spark, im["path"].data,
-        as_of=self.config.get("as_of"),
-        snapshot=self.config.get("snapshot"))},
+        **config_kwargs(self, "as_of", "snapshot"))},
     doc="Read a snapshot-dir table AS OF a time (config: as_of | snapshot); "
         "driver-side pick, scans one snapshot only.",
 )
@@ -1321,7 +1277,7 @@ ExportSharded = _simple_module(
         im["table"].data, im["path"].data,
         n_shards=self.config.get("n_shards", 16),
         id_col=self.config["id_column"],
-        file_format=self.config.get("file_format", "parquet"))},
+        **config_kwargs(self, "file_format"))},
     doc="Deterministic hash-sharded training export with a per-shard "
         "manifest (config: n_shards, id_column, file_format).",
     characteristics=ModuleCharacteristics(is_idempotent=False),
@@ -1342,8 +1298,7 @@ TableTrainingShuffle = _simple_module(
     lambda self, im, ctx: {"table": training_shuffle(
         im["table"].data,
         n_shards=self.config.get("n_shards", 16),
-        id_col=self.config.get("id_column", "doc_id"),
-        salt=self.config.get("salt", ""))},
+        **config_kwargs(self, "salt", id_col="id_column"))},
     doc="Deterministic global training shuffle: reproducible (shard_id, "
         "shard_pos) random total order (config: n_shards, id_column, salt).",
 )
@@ -1363,7 +1318,7 @@ TableZorderKey = _simple_module(
     {"table": TABLE}, {"table": TABLE},
     lambda self, im, ctx: {"table": zorder_key(
         im["table"].data, self.config["columns"],
-        bits=self.config.get("bits", 16))},
+        **config_kwargs(self, "bits"))},
     doc="Morton (Z-order) interleave key for multi-dimensional clustering.",
 )
 

@@ -16,9 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..modules import KiaraModule
+from ..modules import STRING, TABLE, _simple_module, config_kwargs
 from ..operations import Operation
-from ..values import ValueMap
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
@@ -2131,24 +2130,17 @@ def _split_cast_dec(c: Column) -> Column:
 
 
 def _mk(name, fn, doc=""):
-    class _Mod(KiaraModule):
-        _module_type_name = name
-        __doc__ = doc
+    def process(self, im, ctx):
+        col = self.config.get("text_column") or (
+            im["text_column"].data if "text_column" in im else "text")
+        return {"table": fn(im["table"].data, col)}
 
-        def create_inputs_schema(self):
-            return {"table": {"type": "table"},
-                    "text_column": {"type": "string", "optional": True, "default": "text"}}
-
-        def create_outputs_schema(self):
-            return {"table": {"type": "table"}}
-
-        def process(self, inputs: ValueMap, context):
-            col = self.config.get("text_column") or (
-                inputs["text_column"].data if "text_column" in inputs else "text")
-            return {"table": fn(inputs["table"].data, col)}
-
-    _Mod.__name__ = "Mod_" + name.replace(".", "_")
-    return _Mod
+    return _simple_module(
+        name,
+        {"table": TABLE,
+         "text_column": {"type": "string", "optional": True, "default": "text"}},
+        {"table": TABLE},
+        process, doc=doc)
 
 
 TextNormalize = _mk("text.normalize", with_normalized_text,
@@ -2168,297 +2160,160 @@ TextCollocationsLlr = _mk("text.collocations_llr", collocations_llr,
                           "detection over consecutive bigrams")
 
 
-class TextLexicalRichness(KiaraModule):
-    """Per-group lexical-richness profile (see lexical_richness)."""
-
-    _module_type_name = "text.lexical_richness"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": lexical_richness(
-            inputs["table"].data,
-            group_col=self.config.get("group_column", "lang"),
-            text_col=self.config.get("text_column", "text"))}
-
-class TextChunk(KiaraModule):
-    """Fixed-size overlapping character chunks (pre-embedding splitter)."""
-
-    _module_type_name = "text.chunk"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": chunk_documents(
-            inputs["table"].data,
-            text_col=self.config.get("text_column", "text"),
-            id_col=self.config.get("id_column", "doc_id"),
-            size=self.config.get("size", 200),
-            overlap=self.config.get("overlap", 50),
-        )}
-
-
-class TableWeightedSample(KiaraModule):
-    """Deterministic hash-vs-weight importance sampler (map-only)."""
-
-    _module_type_name = "table.sample.weighted"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": weighted_sample(
-            inputs["table"].data,
-            weight_col=self.config["weight_column"],
-            id_col=self.config.get("id_column", "doc_id"))}
-
-
-class TextPackTokenBudget(KiaraModule):
-    """Sharded greedy sequence packing into ~budget-token bins."""
-
-    _module_type_name = "text.pack_token_budget"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": pack_token_budget(
-            inputs["table"].data,
-            budget=self.config.get("budget", 2048),
-            shards=self.config.get("shards", 16),
-            id_col=self.config.get("id_column", "doc_id"),
-            text_col=self.config.get("text_column", "text"))}
-
-
-class TextPackConcat(KiaraModule):
-    """Pack documents into token-budget bins AND materialize the
-    concatenated training sequences (see pack_concat_sequences)."""
-
-    _module_type_name = "text.pack_concat"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": pack_concat_sequences(
-            inputs["table"].data,
-            budget=self.config.get("budget", 2048),
-            shards=self.config.get("shards", 16),
-            id_col=self.config.get("id_column", "doc_id"),
-            text_col=self.config.get("text_column", "text"),
-            sep=self.config.get("separator", "\n\n"))}
-
-
-class TextChunkSentences(KiaraModule):
-    """Sentence-aware greedy chunking (never cuts mid-sentence)."""
-
-    _module_type_name = "text.chunk_sentences"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": chunk_by_sentences(
-            inputs["table"].data,
-            text_col=self.config.get("text_column", "text"),
-            id_col=self.config.get("id_column", "doc_id"),
-            max_chars=self.config.get("max_chars", 400))}
-
-
-class TableTemperatureSample(KiaraModule):
-    """Temperature-based mixture sampling (rate_g = (n_g/n_min)^(alpha-1);
-    see temperature_sample)."""
-
-    _module_type_name = "table.sample.temperature"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": temperature_sample(
-            inputs["table"].data,
-            self.config["group_column"],
-            self.config.get("alpha", 0.5),
-            self.config.get("id_column", "doc_id"))}
-
-
-class TableMixtureSample(KiaraModule):
-    """Deterministic mixture-ratio downsampler over a group column."""
-
-    _module_type_name = "table.sample.mixture"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": mixture_sample(
-            inputs["table"].data,
-            group_col=self.config["group_column"],
-            weights=self.config["weights"],
-            id_col=self.config.get("id_column", "doc_id"))}
-
-
-class TableTokenBudgetCap(KiaraModule):
-    """Best-first per-group token-budget cap."""
-
-    _module_type_name = "table.cap.token_budget"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": token_budget_cap(
-            inputs["table"].data,
-            group_col=self.config["group_column"],
-            budget=self.config["budget"],
-            order_col=self.config.get("order_column", "n_chars"),
-            id_col=self.config.get("id_column", "doc_id"),
-            text_col=self.config.get("text_column", "text"))}
-
-
-class TextSpanCorruption(KiaraModule):
-    """T5-style deterministic span-corruption pair prep (see
-    span_corruption)."""
-
-    _module_type_name = "text.augment.span_corruption"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": span_corruption(
-            inputs["table"].data,
-            id_col=self.config.get("id_column", "doc_id"),
-            text_col=self.config.get("text_column", "text"),
-            span_len=self.config.get("span_len", 3),
-            block_len=self.config.get("block_len", 20))}
-
-
-class TableUnimaxSample(KiaraModule):
-    """UniMax water-filling token-budget sampler (see unimax_sample)."""
-
-    _module_type_name = "table.sample.unimax"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": unimax_sample(
-            inputs["table"].data,
-            group_col=self.config["group_column"],
-            budget=self.config["budget"],
-            max_epochs=self.config.get("max_epochs", 1.0),
-            id_col=self.config.get("id_column", "doc_id"),
-            text_col=self.config.get("text_column", "text"))}
-
-
-class TableDictEncode(KiaraModule):
-    """Dictionary encoding of a categorical column (broadcast dict join)."""
-
-    _module_type_name = "table.encode.dictionary"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}, "dictionary": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        encoded, dictionary = dict_encode(
-            inputs["table"].data, self.config["column"])
-        return {"table": encoded, "dictionary": dictionary}
-
-
-class TableSplitByGroup(KiaraModule):
-    """Leakage-safe train/val/test split keyed on a group column."""
-
-    _module_type_name = "table.split.by_group"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": split_by_group(
-            inputs["table"].data, self.config["group_column"],
-            train_pct=self.config.get("train_pct", 80),
-            val_pct=self.config.get("val_pct", 10))}
-
-
-class TextFeatureHash(KiaraModule):
-    """Hashing-trick token feature indices (vocabulary-free)."""
-
-    _module_type_name = "text.feature_hash"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        t = inputs["table"].data
-        return {"table": t.withColumn(
-            self.config.get("output_column", "feature_idx"),
-            feature_hash(F.col(self.config.get("text_column", "text")),
-                         dim=self.config.get("dim", 1024)))}
-
-
-class TextTokenDropout(KiaraModule):
-    """Deterministic token-dropout augmentation (see token_dropout)."""
-
-    _module_type_name = "text.augment.token_dropout"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": token_dropout(
-            inputs["table"].data,
-            id_col=self.config.get("id_column", "doc_id"),
-            text_col=self.config.get("text_column", "text"),
-            drop_pct=self.config.get("drop_pct", 20),
-            out_col=self.config.get("output_column", "augmented_text"))}
+TextLexicalRichness = _simple_module(
+    "text.lexical_richness", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": lexical_richness(
+        im["table"].data,
+        **config_kwargs(self, group_col="group_column",
+                        text_col="text_column"))},
+    doc="Per-group lexical-richness profile (see lexical_richness).",
+)
+
+TextChunk = _simple_module(
+    "text.chunk", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": chunk_documents(
+        im["table"].data,
+        **config_kwargs(self, "size", "overlap", text_col="text_column",
+                        id_col="id_column"),
+    )},
+    doc="Fixed-size overlapping character chunks (pre-embedding splitter).",
+)
+
+TableWeightedSample = _simple_module(
+    "table.sample.weighted", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": weighted_sample(
+        im["table"].data,
+        weight_col=self.config["weight_column"],
+        **config_kwargs(self, id_col="id_column"))},
+    doc="Deterministic hash-vs-weight importance sampler (map-only).",
+)
+
+TextPackTokenBudget = _simple_module(
+    "text.pack_token_budget", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": pack_token_budget(
+        im["table"].data,
+        **config_kwargs(self, "budget", "shards", id_col="id_column",
+                        text_col="text_column"))},
+    doc="Sharded greedy sequence packing into ~budget-token bins.",
+)
+
+TextPackConcat = _simple_module(
+    "text.pack_concat", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": pack_concat_sequences(
+        im["table"].data,
+        **config_kwargs(self, "budget", "shards", id_col="id_column",
+                        text_col="text_column", sep="separator"))},
+    doc="""Pack documents into token-budget bins AND materialize the
+    concatenated training sequences (see pack_concat_sequences).""",
+)
+
+TextChunkSentences = _simple_module(
+    "text.chunk_sentences", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": chunk_by_sentences(
+        im["table"].data,
+        **config_kwargs(self, "max_chars", text_col="text_column",
+                        id_col="id_column"))},
+    doc="Sentence-aware greedy chunking (never cuts mid-sentence).",
+)
+
+TableTemperatureSample = _simple_module(
+    "table.sample.temperature", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": temperature_sample(
+        im["table"].data,
+        self.config["group_column"],
+        **config_kwargs(self, "alpha", id_col="id_column"))},
+    doc="""Temperature-based mixture sampling (rate_g = (n_g/n_min)^(alpha-1);
+    see temperature_sample).""",
+)
+
+TableMixtureSample = _simple_module(
+    "table.sample.mixture", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": mixture_sample(
+        im["table"].data,
+        group_col=self.config["group_column"],
+        weights=self.config["weights"],
+        **config_kwargs(self, id_col="id_column"))},
+    doc="Deterministic mixture-ratio downsampler over a group column.",
+)
+
+TableTokenBudgetCap = _simple_module(
+    "table.cap.token_budget", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": token_budget_cap(
+        im["table"].data,
+        group_col=self.config["group_column"],
+        budget=self.config["budget"],
+        **config_kwargs(self, order_col="order_column", id_col="id_column",
+                        text_col="text_column"))},
+    doc="Best-first per-group token-budget cap.",
+)
+
+TextSpanCorruption = _simple_module(
+    "text.augment.span_corruption", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": span_corruption(
+        im["table"].data,
+        **config_kwargs(self, "span_len", "block_len", id_col="id_column",
+                        text_col="text_column"))},
+    doc="""T5-style deterministic span-corruption pair prep (see
+    span_corruption).""",
+)
+
+TableUnimaxSample = _simple_module(
+    "table.sample.unimax", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": unimax_sample(
+        im["table"].data,
+        group_col=self.config["group_column"],
+        budget=self.config["budget"],
+        **config_kwargs(self, "max_epochs", id_col="id_column",
+                        text_col="text_column"))},
+    doc="UniMax water-filling token-budget sampler (see unimax_sample).",
+)
+
+
+def _table_dict_encode_process(self, im, ctx):
+    encoded, dictionary = dict_encode(
+        im["table"].data, self.config["column"])
+    return {"table": encoded, "dictionary": dictionary}
+
+
+TableDictEncode = _simple_module(
+    "table.encode.dictionary",
+    {"table": TABLE},
+    {"table": TABLE, "dictionary": TABLE},
+    _table_dict_encode_process,
+    doc="Dictionary encoding of a categorical column (broadcast dict join).",
+)
+
+TableSplitByGroup = _simple_module(
+    "table.split.by_group", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": split_by_group(
+        im["table"].data, self.config["group_column"],
+        **config_kwargs(self, "train_pct", "val_pct"))},
+    doc="Leakage-safe train/val/test split keyed on a group column.",
+)
+
+
+def _text_feature_hash_process(self, im, ctx):
+    t = im["table"].data
+    return {"table": t.withColumn(
+        self.config.get("output_column", "feature_idx"),
+        feature_hash(F.col(self.config.get("text_column", "text")),
+                     **config_kwargs(self, "dim")))}
+
+
+TextFeatureHash = _simple_module(
+    "text.feature_hash", {"table": TABLE}, {"table": TABLE},
+    _text_feature_hash_process,
+    doc="Hashing-trick token feature indices (vocabulary-free).",
+)
+
+TextTokenDropout = _simple_module(
+    "text.augment.token_dropout", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": token_dropout(
+        im["table"].data,
+        **config_kwargs(self, "drop_pct", id_col="id_column",
+                        text_col="text_column", out_col="output_column"))},
+    doc="Deterministic token-dropout augmentation (see token_dropout).",
+)
 
 
 # Unicode script ranges for the script detector.  BMP-only blocks with
@@ -2635,39 +2490,21 @@ TextBpeMerges = _mk("text.bpe_merge_candidates", bpe_merge_candidates,
                     "BPE round-1 merge candidates over the word-freq dict")
 
 
-class TextBpeTrain(KiaraModule):
-    """Iterative BPE tokenizer training (see bpe_train)."""
-
-    _module_type_name = "text.bpe_train"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": bpe_train(
-            inputs["table"].data,
-            text_col=self.config.get("text_column", "text"),
-            n_merges=self.config.get("n_merges", 10),
-            min_pair_count=self.config.get("min_pair_count", 2))}
-class TextBpeEncode(KiaraModule):
-    """BPE encode: apply a trained merge table (broadcast fold, no UDF)."""
-
-    _module_type_name = "text.bpe_encode"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}, "merges": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": bpe_encode(
-            inputs["table"].data, inputs["merges"].data,
-            text_col=self.config.get("text_column", "text"),
-            id_col=self.config.get("id_column", "doc_id"))}
+TextBpeTrain = _simple_module(
+    "text.bpe_train", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": bpe_train(
+        im["table"].data,
+        **config_kwargs(self, "n_merges", "min_pair_count",
+                        text_col="text_column"))},
+    doc="Iterative BPE tokenizer training (see bpe_train).",
+)
+TextBpeEncode = _simple_module(
+    "text.bpe_encode", {"table": TABLE, "merges": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": bpe_encode(
+        im["table"].data, im["merges"].data,
+        **config_kwargs(self, text_col="text_column", id_col="id_column"))},
+    doc="BPE encode: apply a trained merge table (broadcast fold, no UDF).",
+)
 
 
 TextCooccurrencePmi = _mk("text.cooccurrence_pmi", cooccurrence_pmi,
@@ -2680,124 +2517,66 @@ TextBigramLogprob = _mk("text.bigram_logprob", bigram_logprob,
                         "self-trained add-1 bigram LM per-doc score")
 TextKneserNey = _mk("text.kneser_ney_bigram", kneser_ney_bigram_logprob,
                     "interpolated Kneser-Ney bigram LM per-doc score")
-class TextNaiveBayes(KiaraModule):
-    """In-engine multinomial Naive Bayes: train + score in one plan."""
-
-    _module_type_name = "text.naive_bayes_classify"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": naive_bayes_classify(
-            inputs["table"].data,
-            label_col=self.config.get("label_column", "lang"),
-            text_col=self.config.get("text_column", "text"),
-            id_col=self.config.get("id_column", "doc_id"))}
+TextNaiveBayes = _simple_module(
+    "text.naive_bayes_classify", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": naive_bayes_classify(
+        im["table"].data,
+        **config_kwargs(self, label_col="label_column", text_col="text_column",
+                        id_col="id_column"))},
+    doc="In-engine multinomial Naive Bayes: train + score in one plan.",
+)
 TextRemoveStopwords = _mk("text.remove_stopwords", remove_stopwords,
                           "stopword removal (literal vocabulary, map-only)")
 TextStem = _mk("text.stem", stem_tokens,
                "S-stemmer plural stripping (deterministic, map-only)")
 
 
-class TextKwic(KiaraModule):
-    """Keyword-in-context concordance (see kwic_concordance)."""
+TextKwic = _simple_module(
+    "text.kwic",
+    {"table": TABLE, "term": STRING},
+    {"table": TABLE},
+    lambda self, im, ctx: {"table": kwic_concordance(
+        im["table"].data, im["term"].data,
+        **config_kwargs(self, "window", text_col="text_column",
+                        id_col="id_column"))},
+    doc="Keyword-in-context concordance (see kwic_concordance).",
+)
 
-    _module_type_name = "text.kwic"
+TextTermTrends = _simple_module(
+    "text.term_trends", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": term_trends(
+        im["table"].data, self.config["terms"],
+        **config_kwargs(self, text_col="text_column",
+                        group_col="group_column"))},
+    doc="Term usage trends per group (see term_trends).",
+)
 
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"},
-                "term": {"type": "string"}}
+TableWeightedReservoirTopk = _simple_module(
+    "table.sample.weighted_topk", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": weighted_reservoir_topk(
+        im["table"].data, self.config["weight_column"],
+        **config_kwargs(self, "k", "salt", id_col="id_column"))},
+    doc="Fixed-size weighted sample without replacement (A-ES top-k).",
+)
 
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
+TextJsDivergence = _simple_module(
+    "text.js_divergence", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": token_distribution_divergence(
+        im["table"].data,
+        **config_kwargs(self, "top_k", group_col="group_column",
+                        text_col="text_column"))},
+    doc="""Pairwise Jensen-Shannon divergence between per-group token
+    distributions (see token_distribution_divergence).""",
+)
 
-    def process(self, inputs: ValueMap, context):
-        return {"table": kwic_concordance(
-            inputs["table"].data, inputs["term"].data,
-            text_col=self.config.get("text_column", "text"),
-            id_col=self.config.get("id_column", "doc_id"),
-            window=self.config.get("window", 3))}
-
-
-class TextTermTrends(KiaraModule):
-    """Term usage trends per group (see term_trends)."""
-
-    _module_type_name = "text.term_trends"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": term_trends(
-            inputs["table"].data, self.config["terms"],
-            text_col=self.config.get("text_column", "text"),
-            group_col=self.config.get("group_column", "source"))}
-
-
-class TableWeightedReservoirTopk(KiaraModule):
-    """Fixed-size weighted sample without replacement (A-ES top-k)."""
-
-    _module_type_name = "table.sample.weighted_topk"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": weighted_reservoir_topk(
-            inputs["table"].data, self.config["weight_column"],
-            k=self.config.get("k", 100),
-            id_col=self.config.get("id_column", "doc_id"),
-            salt=self.config.get("salt", "aes"))}
-
-
-class TextJsDivergence(KiaraModule):
-    """Pairwise Jensen-Shannon divergence between per-group token
-    distributions (see token_distribution_divergence)."""
-
-    _module_type_name = "text.js_divergence"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": token_distribution_divergence(
-            inputs["table"].data,
-            group_col=self.config.get("group_column", "lang"),
-            text_col=self.config.get("text_column", "text"),
-            top_k=self.config.get("top_k", 200))}
-
-
-class TextCleanC4(KiaraModule):
-    """C4-style line-level cleaning (see clean_c4)."""
-
-    _module_type_name = "text.clean.c4"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": clean_c4(
-            inputs["table"].data,
-            id_col=self.config.get("id_column", "doc_id"),
-            text_col=self.config.get("text_column", "text"),
-            min_words_per_line=self.config.get("min_words_per_line", 3),
-            min_sentences=self.config.get("min_sentences", 3))}
+TextCleanC4 = _simple_module(
+    "text.clean.c4", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": clean_c4(
+        im["table"].data,
+        **config_kwargs(self, "min_words_per_line", "min_sentences",
+                        id_col="id_column", text_col="text_column"))},
+    doc="C4-style line-level cleaning (see clean_c4).",
+)
 
 
 TextGoodTuring = _mk("text.good_turing", good_turing,

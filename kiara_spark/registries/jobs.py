@@ -220,16 +220,20 @@ class JobRegistry:
             return None
         return ValueMap(outputs)
 
-    def execute_job(self, module: "KiaraModule", inputs: ValueMap) -> JobRecord:
-        key = self._cache_key(module, inputs)
+    def _probe_or_run(self, key: str | None, module_type: str, config: dict,
+                      inputs: ValueMap, compute) -> JobRecord:
+        """The one probe -> hit -> record path behind ``execute_job`` and
+        ``execute_composite``: in-session records first, then the persistent
+        store; a hit returns a ``cache_hit`` record, a miss runs
+        ``compute() -> ValueMap`` and records it under ``key``."""
         if key is not None and key not in self._records:
             # cross-restart probe: outputs persisted by a previous context
             if (stored := self._probe_stored(key)) is not None:
                 self._records[key] = JobRecord(
                     job_id=f"stored-{key[:8]}",
                     job_hash=key,
-                    module_type=module.module_type,
-                    module_config=module.config,
+                    module_type=module_type,
+                    module_config=config,
                     input_ids={k: v.value_id for k, v in inputs.items()},
                     outputs=stored,
                     runtime_sec=0.0,
@@ -251,22 +255,29 @@ class JobRegistry:
             return hit
 
         start = time.monotonic()
-        outputs = module.run(inputs, self._context)
+        outputs = compute()
         record = JobRecord(
             job_id=f"job-{len(self._history)}",
             job_hash=key or "",
-            module_type=module.module_type,
-            module_config=module.config,
+            module_type=module_type,
+            module_config=config,
             input_ids={k: v.value_id for k, v in inputs.items()},
             outputs=outputs,
             runtime_sec=time.monotonic() - start,
             environment=self._environment(),
         )
-        for v in outputs.values():
-            self._context.data_registry.register_value(v)
         if key is not None:
             self._records[key] = record
         self._history.append(record)
+        return record
+
+    def execute_job(self, module: "KiaraModule", inputs: ValueMap) -> JobRecord:
+        record = self._probe_or_run(
+            self._cache_key(module, inputs), module.module_type, module.config,
+            inputs, lambda: module.run(inputs, self._context))
+        if not record.cache_hit:
+            for v in record.outputs.values():
+                self._context.data_registry.register_value(v)
         return record
 
     def execute_composite(
@@ -298,48 +309,8 @@ class JobRegistry:
                 key = self._key_for(module_type, config, inputs)
             except Exception:  # un-hashable input (exotic object): no cache
                 key = None
-        if key is not None and key not in self._records:
-            if (stored := self._probe_stored(key)) is not None:
-                self._records[key] = JobRecord(
-                    job_id=f"stored-{key[:8]}",
-                    job_hash=key,
-                    module_type=module_type,
-                    module_config=config,
-                    input_ids={k: v.value_id for k, v in inputs.items()},
-                    outputs=stored,
-                    runtime_sec=0.0,
-                )
-        if key is not None and key in self._records:
-            prior = self._records[key]
-            hit = JobRecord(
-                job_id=f"{prior.job_id}+hit",
-                job_hash=key,
-                module_type=prior.module_type,
-                module_config=prior.module_config,
-                input_ids=prior.input_ids,
-                outputs=prior.outputs,
-                runtime_sec=0.0,
-                environment=prior.environment,
-                cache_hit=True,
-            )
-            self._history.append(hit)
-            return hit
-        start = time.monotonic()
-        outputs = compute()
-        record = JobRecord(
-            job_id=f"job-{len(self._history)}",
-            job_hash=key or "",
-            module_type=module_type,
-            module_config=config,
-            input_ids={k: v.value_id for k, v in inputs.items()},
-            outputs=outputs,
-            runtime_sec=time.monotonic() - start,
-            environment=self._environment(),
-        )
-        if key is not None:
-            self._records[key] = record
-        self._history.append(record)
-        if persist:
+        record = self._probe_or_run(key, module_type, config, inputs, compute)
+        if persist and not record.cache_hit:
             self.persist_record(record)
         return record
 

@@ -19,9 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..modules import KiaraModule
+from ..modules import TABLE, _simple_module, config_kwargs
 from ..operations import Operation
-from ..values import ValueMap
 
 SESSION_SCHEMA = ("user_id long, session_start_us long, session_end_us long, "
                   "n_events long")
@@ -240,25 +239,15 @@ def user_lifetime_stats_stream(
         "append", GroupStateTimeout.NoTimeout)
 
 
-class SessionizeUsers(KiaraModule):
-    """Custom stateful sessionization (op ``events.sessionize``); batch
-    grouped-map now, same logic as the streaming stateful variant."""
-
-    _module_type_name = "events.sessionize"
-
-    def create_inputs_schema(self):
-        return {"events": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"sessions": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"sessions": sessionize_pandas(
-            inputs["events"].data,
-            key=self.config.get("key", "user_id"),
-            ts_col=self.config.get("ts_column", "ts"),
-            gap_seconds=self.config.get("gap_seconds", 1800.0),
-        )}
+SessionizeUsers = _simple_module(
+    "events.sessionize", {"events": TABLE}, {"sessions": TABLE},
+    lambda self, im, ctx: {"sessions": sessionize_pandas(
+        im["events"].data,
+        **config_kwargs(self, "key", "gap_seconds", ts_col="ts_column"),
+    )},
+    doc="""Custom stateful sessionization (op ``events.sessionize``); batch
+    grouped-map now, same logic as the streaming stateful variant.""",
+)
 
 
 MODULES = [SessionizeUsers]

@@ -22,9 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..modules import KiaraModule
+from ..modules import TABLE, _simple_module, config_kwargs
 from ..operations import Operation
-from ..values import ValueMap
 from ..operators.tables import _agg_cols
 
 
@@ -415,145 +414,69 @@ def session_paths(
 
 
 def _win_module(name, fn, extra_fields):
-    class _Mod(KiaraModule):
-        _module_type_name = name
-
-        def create_inputs_schema(self):
-            return {"table": {"type": "table"}}
-
-        def create_outputs_schema(self):
-            return {"table": {"type": "table"}}
-
-        def process(self, inputs: ValueMap, context):
-            kwargs = {k: self.config[k] for k in extra_fields if k in self.config}
-            return {"table": fn(
-                inputs["table"].data,
-                self.config.get("ts_column", "ts"),
-                **kwargs,
-                keys=self.config.get("keys"),
-                aggregations=self.config.get("aggregations"),
-            )}
-
-    _Mod.__name__ = "Mod_" + name.replace(".", "_")
-    return _Mod
+    return _simple_module(
+        name, {"table": TABLE}, {"table": TABLE},
+        lambda self, im, ctx: {"table": fn(
+            im["table"].data, self.config.get("ts_column", "ts"),
+            **config_kwargs(self, *extra_fields, "keys", "aggregations"))})
 
 
 EventsTumbling = _win_module("events.window.tumbling", tumbling_window_agg, ["duration"])
 EventsSliding = _win_module("events.window.sliding", sliding_window_agg, ["duration", "slide"])
 EventsSession = _win_module("events.window.session", session_window_agg, ["gap"])
 
-class EventsRetention(KiaraModule):
-    """Cohort retention grid over an event table."""
+EventsRetention = _simple_module(
+    "events.retention.cohorts", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": retention_cohorts(
+        im["table"].data,
+        **config_kwargs(self, ts_col="ts_column", user_col="user_column"))},
+    doc="Cohort retention grid over an event table.",
+)
 
-    _module_type_name = "events.retention.cohorts"
+EventsGapFill = _simple_module(
+    "events.gap_fill.hourly", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": gap_fill_hourly(
+        im["table"].data,
+        **config_kwargs(self, ts_col="ts_column", key_col="key_column"))},
+    doc="Hourly gap-fill + forward fill (gapfill/locf) over an event table.",
+)
 
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
+EventsGapInterpolate = _simple_module(
+    "events.gap_fill.interpolate", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": gap_fill_interpolate(
+        im["table"].data,
+        **config_kwargs(self, ts_col="ts_column", key_col="key_column"))},
+    doc="Hourly gap-fill + LINEAR interpolation over an event table.",
+)
 
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
+EventsFunnel = _simple_module(
+    "events.funnel", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": funnel_stages(
+        im["table"].data,
+        stages=self.config["stages"],
+        **config_kwargs(self, ts_col="ts_column", user_col="user_column",
+                        type_col="type_column"))},
+    doc="Ordered conversion funnel over an event table (config: ``stages``).",
+)
 
-    def process(self, inputs: ValueMap, context):
-        return {"table": retention_cohorts(
-            inputs["table"].data,
-            ts_col=self.config.get("ts_column", "ts"),
-            user_col=self.config.get("user_column", "user_id"))}
+EventsSessionPaths = _simple_module(
+    "events.session_paths", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": session_paths(
+        im["table"].data,
+        **config_kwargs(self, "max_steps", ts_col="ts_column",
+                        user_col="user_column", type_col="type_column",
+                        tiebreak_col="tiebreak_column"))},
+    doc="Ordered behavioral paths (first-N event types per user) with counts.",
+)
 
-
-class EventsGapFill(KiaraModule):
-    """Hourly gap-fill + forward fill (gapfill/locf) over an event table."""
-
-    _module_type_name = "events.gap_fill.hourly"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": gap_fill_hourly(
-            inputs["table"].data,
-            ts_col=self.config.get("ts_column", "ts"),
-            key_col=self.config.get("key_column", "event_type"))}
-
-
-class EventsGapInterpolate(KiaraModule):
-    """Hourly gap-fill + LINEAR interpolation over an event table."""
-
-    _module_type_name = "events.gap_fill.interpolate"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": gap_fill_interpolate(
-            inputs["table"].data,
-            ts_col=self.config.get("ts_column", "ts"),
-            key_col=self.config.get("key_column", "event_type"))}
-
-
-class EventsFunnel(KiaraModule):
-    """Ordered conversion funnel over an event table (config: ``stages``)."""
-
-    _module_type_name = "events.funnel"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": funnel_stages(
-            inputs["table"].data,
-            stages=self.config["stages"],
-            ts_col=self.config.get("ts_column", "ts"),
-            user_col=self.config.get("user_column", "user_id"),
-            type_col=self.config.get("type_column", "event_type"))}
-
-
-class EventsSessionPaths(KiaraModule):
-    """Ordered behavioral paths (first-N event types per user) with counts."""
-
-    _module_type_name = "events.session_paths"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": session_paths(
-            inputs["table"].data,
-            ts_col=self.config.get("ts_column", "ts"),
-            user_col=self.config.get("user_column", "user_id"),
-            type_col=self.config.get("type_column", "event_type"),
-            tiebreak_col=self.config.get("tiebreak_column", "event_id"),
-            max_steps=self.config.get("max_steps", 8))}
-
-
-class EventsAnomalyZscore(KiaraModule):
-    """Hourly volume anomalies per key (z-score vs the key's own history)."""
-
-    _module_type_name = "events.anomaly.zscore"
-
-    def create_inputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def create_outputs_schema(self):
-        return {"table": {"type": "table"}}
-
-    def process(self, inputs: ValueMap, context):
-        return {"table": anomaly_hourly_counts(
-            inputs["table"].data,
-            ts_col=self.config.get("ts_column", "ts"),
-            key_col=self.config.get("key_column", "event_type"),
-            k_sigma=self.config.get("k_sigma", 3.0))}
+EventsAnomalyZscore = _simple_module(
+    "events.anomaly.zscore", {"table": TABLE}, {"table": TABLE},
+    lambda self, im, ctx: {"table": anomaly_hourly_counts(
+        im["table"].data,
+        **config_kwargs(self, "k_sigma", ts_col="ts_column",
+                        key_col="key_column"))},
+    doc="Hourly volume anomalies per key (z-score vs the key's own history).",
+)
 
 
 MODULES = [EventsTumbling, EventsSliding, EventsSession, EventsRetention,

@@ -74,6 +74,21 @@ def test_graph_module_roundtrip(ctx, spark):
            {1: 1, 2: 2, 3: 1}
 
 
+def test_components_module_uses_the_function_default_cap(ctx, spark):
+    """An unset ``max_iterations`` falls through to connected_components'
+    own default: on the distributed path a 101-node path graph is ONE
+    component through the module, as it is from a direct call."""
+    edges = spark.createDataFrame([(i, i + 1) for i in range(100)],
+                                  "src long, dst long")
+    g = ctx.run_job("create.network_graph.from.tables", {"edges": edges})
+    out = ctx.run_job("network_graph.connected_components",
+                      {"graph": g["graph"]},
+                      operation_config={"driver_threshold": 0})
+    rows = out["table"].data.collect()
+    assert len(rows) == 101
+    assert {r["component"] for r in rows} == {0}
+
+
 def test_database_ops(ctx):
     db = ctx.run_job("create.database.from.folder",
                      {"path": "/root/testdata/sf0.001"})

@@ -113,6 +113,18 @@ def test_operation_doc_model_typed(ctx):
     assert d["characteristics"]["is_internal"] is True
 
 
+def test_no_module_documents_itself_with_the_base_docstring(ctx):
+    """A module declared without a doc has an empty description, never the
+    inherited ``KiaraModule`` docstring."""
+    from kiara_spark.doc import extract_doc
+    from kiara_spark.modules import KiaraModule
+
+    base = extract_doc(KiaraModule)["description"]
+    leaked = sorted(name for name, cls in ctx.module_registry._modules.items()
+                    if extract_doc(cls)["description"] == base)
+    assert leaked == []
+
+
 def test_job_markdown_renderer(ctx):
     """A run job renders to a metadata-only markdown page: manifest,
     input/output value ids, runtime environment rows."""
