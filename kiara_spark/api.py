@@ -25,6 +25,7 @@ import os
 from typing import Any, Mapping
 
 from .context import KiaraContext
+from .jsonfile import read_json, write_json
 from .values import Value, ValueMap
 
 
@@ -740,19 +741,15 @@ class KiaraAPI:
         return os.path.join(self.context.base_path, "job_comments.json")
 
     def _load_comments(self) -> None:
-        try:
-            with open(self._comments_file()) as f:
-                self._comments = json.load(f)
-        except (OSError, ValueError):
-            self._comments = {}
+        self._comments = read_json(self._comments_file(), "job comments",
+                                   default={})
 
     def set_job_comment(self, job_id: str, comment: str) -> None:
         """Attach/replace the user comment on a job."""
         self.get_job_record(job_id)  # validate
         self._comments[job_id] = comment
         try:
-            with open(self._comments_file(), "w") as f:
-                json.dump(self._comments, f)
+            write_json(self._comments_file(), self._comments)
         except OSError:
             pass
 
@@ -1142,8 +1139,7 @@ class KiaraAPI:
         with open(path) as f:
             manifest = json.load(f)
         manifest.setdefault("metadata", {})[key] = value
-        with open(path, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
+        write_json(path, manifest, indent=1, sort_keys=True)
 
     # -- metadata items ---------------------------------------------------
 
@@ -1154,8 +1150,7 @@ class KiaraAPI:
         items = self._load_metadata_items()
         item_id = f"md-{len(items)}"
         items.append({"item_id": item_id, "key": key, "value": value})
-        with open(self._metadata_items_file(), "w") as f:
-            json.dump(items, f, indent=1, default=str)
+        write_json(self._metadata_items_file(), items, indent=1, default=str)
         return item_id
 
     def find_metadata_items(self, key: str | None = None) -> list[dict]:
@@ -1168,11 +1163,8 @@ class KiaraAPI:
         return os.path.join(self.context.base_path, "metadata_items.json")
 
     def _load_metadata_items(self) -> list[dict]:
-        try:
-            with open(self._metadata_items_file()) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return []
+        return read_json(self._metadata_items_file(), "metadata items",
+                         default=[])
 
     # -- workflows (reference workflow session surface) --------------------
 

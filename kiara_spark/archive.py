@@ -28,6 +28,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
+from .jsonfile import write_json
 from .values import ORPHAN, Value, ValuePedigree, ValueSchema
 
 if TYPE_CHECKING:
@@ -159,8 +160,8 @@ def export_archive(
         manifest["archive_name"] = archive_name
     if compression:
         manifest["compression"] = compression
-    with open(os.path.join(archive_path, MANIFEST_NAME), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    write_json(os.path.join(archive_path, MANIFEST_NAME), manifest,
+               indent=1, sort_keys=True)
     return manifest
 
 

@@ -14,15 +14,18 @@ order-insensitive aggregate (sum of row-hash prefixes mod 2^64 plus xor and
 count).  This is stable across partitionings, computed entirely JVM-side
 (no Python boundary) and is one Spark job with a map-side partial aggregate —
 at 100 TB it's a single scan with near-zero shuffle (one row per partition).
+A save takes the same aggregates with ``DataFrame.observe`` while it writes
+the parquet files, so storing a value costs no hashing scan.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+from collections.abc import Mapping
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -53,28 +56,27 @@ def job_hash(module_type: str, module_config: dict | None, input_ids: dict) -> s
     )
 
 
-def dataframe_content_hash(df: DataFrame) -> str:
-    """Order- and partitioning-insensitive content hash of a DataFrame.
-
-    row_hash = sha2_256(to_json(struct(<columns sorted by name>)))
-    content  = sha256 of (count, sum(prefix64) mod 2^64, bit_xor(prefix64),
-               schema-ddl) — commutative combine, so partition order and row
-    order don't matter.  One scan, map-side partial agg, no wide shuffle.
-    """
+def content_hash_aggregates(df: DataFrame) -> list[Column]:
+    """The three order-insensitive aggregates the content hash combines,
+    over each row's hash prefix: the first 15 hex digits (fits a signed
+    64-bit long; conv() parses hex) of
+    sha2_256(to_json(struct(<columns sorted by name>))).  Also usable with
+    ``DataFrame.observe``, which takes them during whatever action runs the
+    plan (a parquet write) with no scan of its own."""
     cols = sorted(df.columns)
     row_hash = F.sha2(F.to_json(F.struct(*[F.col(c) for c in cols])), 256)
-    # first 15 hex chars -> fits signed 64-bit; conv() parses hex
     prefix = F.conv(F.substring(row_hash, 1, 15), 16, 10).cast("long")
-    agg = (
-        df.select(prefix.alias("_rh"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal accumulator: long sum would overflow under ANSI mode
-            F.sum(F.col("_rh").cast("decimal(38,0)")).alias("s"),
-            F.expr("bit_xor(_rh)").alias("x"),
-        )
-        .collect()[0]
-    )
+    return [
+        F.count(F.lit(1)).alias("n"),
+        # decimal accumulator: long sum would overflow under ANSI mode
+        F.sum(prefix.cast("decimal(38,0)")).alias("s"),
+        F.bit_xor(prefix).alias("x"),
+    ]
+
+
+def content_hash_from_aggregates(df: DataFrame, agg: Mapping) -> str:
+    """The content hash of ``df`` from its aggregates ``n``, ``s``, ``x``."""
+    cols = sorted(df.columns)
     basis = {
         "n": agg["n"],
         "s": int(agg["s"] or 0) % (2**64),
@@ -82,3 +84,17 @@ def dataframe_content_hash(df: DataFrame) -> str:
         "schema": [f"{c}:{df.schema[c].dataType.simpleString()}" for c in cols],
     }
     return hash_obj(basis)
+
+
+def dataframe_content_hash(df: DataFrame) -> str:
+    """Order- and partitioning-insensitive content hash of a DataFrame.
+
+    row_hash = sha2_256(to_json(struct(<columns sorted by name>)))
+    content  = sha256 of (count, sum(prefix64) mod 2^64, bit_xor(prefix64),
+               schema-ddl) — commutative combine, so partition order and row
+    order don't matter.  One scan, map-side partial agg, no wide shuffle.
+    ``DataRegistry.store_value`` takes the same aggregates while it writes
+    (``content_hash_aggregates``), so a save needs no scan of its own.
+    """
+    agg = df.agg(*content_hash_aggregates(df)).collect()[0]
+    return content_hash_from_aggregates(df, agg.asDict())

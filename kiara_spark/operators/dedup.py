@@ -778,8 +778,9 @@ def minhash_index_build(
     sidecar pinning the sketch parameters — a screen with MISMATCHED
     parameters would silently produce garbage candidates, so the loader
     refuses incompatible indexes instead."""
-    import json
     import os
+
+    from ..jsonfile import write_json
 
     sig = minhash_signatures_df(df, id_col, text_col, num_hashes, shingle_k,
                                 shingle_unit)
@@ -789,8 +790,7 @@ def minhash_index_build(
     meta = {"id_col": id_col, "text_col": text_col,
             "num_hashes": num_hashes, "bands": bands,
             "shingle_k": shingle_k, "shingle_unit": shingle_unit}
-    with open(os.path.join(path, "_index_meta.json"), "w") as f:
-        json.dump(meta, f)
+    write_json(os.path.join(path, "_index_meta.json"), meta)
     # count the WRITTEN parquet, not the plan — counting the plan would
     # re-run the whole signature scan (the cost this index amortizes)
     n_rows = df.sparkSession.read.parquet(path).count()

@@ -20,6 +20,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..jsonfile import write_json
 from ..modules import (DICT, STRING, TABLE, ModuleCharacteristics,
                        _simple_module, config_kwargs)
 from ..operations import Operation
@@ -132,10 +133,7 @@ def incremental_read(
     else:
         df = spark.read.format(file_format).load(base).limit(0)
 
-    tmp = state_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"files": sorted(current.items())}, f)
-    os.replace(tmp, state_path)
+    write_json(state_path, {"files": sorted(current.items())})
     return df, {
         "n_new_files": len(new_files),
         "n_known_files": len(seen),

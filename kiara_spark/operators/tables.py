@@ -741,7 +741,7 @@ def export_sharded(
     computed in the SAME job pass semantics as the data — one small
     aggregate) is written next to the data; loaders use it to verify a
     shard set is complete before training starts."""
-    import json
+    from ..jsonfile import write_json
 
     shard = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int")
     out = df.withColumn("_shard", shard)
@@ -765,8 +765,8 @@ def export_sharded(
                                    "id_checksum": r.id_checksum}
                    for r in manifest_rows},
     }
-    with open(os.path.join(path, "_shard_manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    write_json(os.path.join(path, "_shard_manifest.json"), manifest,
+               indent=1, sort_keys=True)
     return manifest
 
 

@@ -6,23 +6,37 @@ Re-expresses the reference's DataRegistry + alias registry + data stores
 map (``alias -> value_id``), and a Parquet warehouse directory for persisted
 table values with JSON sidecar metadata (pedigree, schema, hash).
 
-Value dedup on store (reference ``data/__init__.py:848-948``): a value whose
-content hash already exists in the warehouse is not re-written — the existing
-dataset is reused.  For DataFrame values this costs one hashing scan; callers
-can opt out (``dedup=False``) when the scan is not worth it (huge one-off
-writes).
+A save runs the value's plan once.  The parquet write goes to a staging
+directory under the warehouse while ``DataFrame.observe`` takes the content
+hash's aggregates (``hashing.content_hash_aggregates``).  Value dedup on store
+(reference ``data/__init__.py:848-948``) then looks the hash up: a value whose
+content already exists in the warehouse discards its staging write and reuses
+the existing dataset; a new one is renamed into place with ``os.replace``, so
+a crash mid-write never leaves a half-written dataset under a live path.  The
+trade-off: a dedup hit costs a discarded write instead of a hashing scan.
+
+After a save the value's payload is a scan of the stored files, so the page
+that follows and every later consumer read them instead of re-running the
+plan.  A globally sorted value records ``ordered`` in its sidecar and loads as
+the union of its part files in file-name order (Spark names them by partition
+index): one scan would pack the files into splits largest-first and scramble
+the order.
 """
 
 from __future__ import annotations
 
-import json
+import functools
 import os
+import shutil
 import uuid as _uuid
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql.types import StructType
 
+from ..hashing import content_hash_aggregates, content_hash_from_aggregates
+from ..jsonfile import read_json, write_json
 from ..values import ORPHAN, Value, ValueSchema
 
 if TYPE_CHECKING:
@@ -38,6 +52,21 @@ def _is_uuid_shaped(ref: str) -> bool:
         return True
     except Exception:
         return False
+
+
+# Logical plan nodes that keep their child's row order.
+_ORDER_KEEPING = {"Project", "Filter", "SubqueryAlias", "View", "GlobalLimit",
+                  "LocalLimit"}
+
+
+def _is_ordered(df: DataFrame) -> bool:
+    """True when ``df`` is globally sorted: its analyzed plan (built with the
+    DataFrame, so this plans nothing) is a global ``Sort`` under nodes that
+    keep row order only."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() in _ORDER_KEEPING and node.children().size() == 1:
+        node = node.children().head()
+    return node.nodeName() == "Sort" and bool(getattr(node, "global")())
 
 
 @dataclass
@@ -156,86 +185,120 @@ class DataRegistry:
         return os.path.join(self.warehouse_path, "_aliases.json")
 
     def _load_stored_aliases(self) -> None:
-        if os.path.isfile(self._aliases_file()):
-            with open(self._aliases_file()) as f:
-                self._stored_aliases = json.load(f)
+        self._stored_aliases = read_json(self._aliases_file(), "alias store",
+                                         default={})
 
     def _persist_alias(self, alias: str, path: str) -> None:
         self._stored_aliases[alias] = path
-        with open(self._aliases_file(), "w") as f:
-            json.dump(self._stored_aliases, f, indent=1, sort_keys=True)
+        write_json(self._aliases_file(), self._stored_aliases, indent=1,
+                   sort_keys=True)
 
     # -- persistence ------------------------------------------------------
     def _sidecar(self, path: str) -> str:
         return os.path.join(path, "_kiara_value.json")
 
-    def _load_hash_index(self) -> None:
-        if not os.path.isdir(self.warehouse_path):
-            return
-        for name in os.listdir(self.warehouse_path):
-            meta = self._sidecar(os.path.join(self.warehouse_path, name))
-            if os.path.isfile(meta):
-                with open(meta) as f:
-                    info = json.load(f)
-                if h := info.get("content_hash"):
-                    self._hash_index[h] = os.path.join(self.warehouse_path, name)
+    def _read_sidecar(self, path: str) -> dict:
+        return read_json(self._sidecar(path), "value sidecar", default={})
 
-    def store_value(self, value: Value, alias: str | None = None, dedup: bool = True) -> str:
+    def _load_hash_index(self) -> None:
+        for name in os.listdir(self.warehouse_path):
+            path = os.path.join(self.warehouse_path, name)
+            if os.path.isfile(self._sidecar(path)):
+                if h := self._read_sidecar(path).get("content_hash"):
+                    self._hash_index[h] = path
+
+    def _scan(self, path: str, info: dict) -> DataFrame:
+        """The stored dataset at ``path`` as a pure plan.  The sidecar schema
+        spares the footer-inference job a bare ``spark.read.parquet`` runs,
+        so a cross-restart cache hit stays at zero Spark jobs."""
+        reader = self._context.spark.read
+        if info.get("spark_schema"):
+            reader = reader.schema(StructType.fromJson(info["spark_schema"]))
+        if info.get("ordered"):
+            parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+            if len(parts) > 1:
+                return functools.reduce(DataFrame.union, (
+                    reader.parquet(os.path.join(path, p)) for p in parts))
+        return reader.parquet(path)
+
+    def store_value(self, value: Value, alias: str | None = None) -> str:
         """Persist a table value to the warehouse; returns the dataset path.
 
-        Dedup-by-hash mirrors reference ``_find_existing_value``; the sidecar
-        records pedigree so lineage survives restarts.
-        """
+        A value whose content hash is already known and stored writes
+        nothing.  Otherwise its plan runs once, into a staging directory,
+        and the hash is taken during that write: dedup-by-hash (reference
+        ``_find_existing_value``) then either discards the staging write or
+        renames it into place.  The sidecar records pedigree so lineage
+        survives restarts.  After a write the value's payload is rebound to
+        a scan of the stored dataset."""
         if not isinstance(value.data, DataFrame):
             raise TypeError("store_value currently persists table values only")
-        content_hash = value.content_hash() if dedup else None
-        if content_hash and content_hash in self._hash_index:
-            path = self._hash_index[content_hash]
-        else:
-            path = os.path.join(self.warehouse_path, value.value_id)
-            value.data.write.mode("overwrite").parquet(path)
-            with open(self._sidecar(path), "w") as f:
-                json.dump(
-                    {
-                        "value_id": value.value_id,
-                        "type": value.schema.type,
-                        "content_hash": content_hash,
-                        "pedigree": {
-                            "module_type": value.pedigree.module_type,
-                            "module_config": value.pedigree.module_config,
-                            "inputs": dict(value.pedigree.inputs),
-                        },
-                        "property_links": dict(value.property_links),
-                        "spark_schema": value.data.schema.jsonValue(),
-                    },
-                    f,
-                )
-            if content_hash:
-                self._hash_index[content_hash] = path
+        path = self._hash_index.get(value._content_hash)
+        if path is None:
+            path = self._write(value)
         if alias:
             self.register_alias(alias, value)
             self._persist_alias(alias, path)
         return path
 
+    def _write(self, value: Value) -> str:
+        df = value.data
+        staging = os.path.join(self.warehouse_path,
+                               f"_staging-{_uuid.uuid4().hex}")
+        observation = Observation()
+        try:
+            df.observe(observation, *content_hash_aggregates(df)) \
+                .write.parquet(staging)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        # only after the write has run: before it, ``get`` would wait for it
+        value._content_hash = content_hash_from_aggregates(df, observation.get)
+        ordered = _is_ordered(df)
+        path = self._hash_index.get(value._content_hash)
+        if path is not None:  # dedup hit: the content is stored already
+            shutil.rmtree(staging)
+            info = self._read_sidecar(path)
+            # the hash ignores row and column order: serve the stored
+            # dataset only when neither can differ from this value's
+            stored = info.get("spark_schema")
+            if (ordered or not stored or StructType.fromJson(stored)
+                    .simpleString() != df.schema.simpleString()):
+                return path
+        else:
+            info = {
+                "value_id": value.value_id,
+                "type": value.schema.type,
+                "content_hash": value._content_hash,
+                "ordered": ordered,
+                "pedigree": {
+                    "module_type": value.pedigree.module_type,
+                    "module_config": value.pedigree.module_config,
+                    "inputs": dict(value.pedigree.inputs),
+                },
+                "property_links": dict(value.property_links),
+                "spark_schema": df.schema.jsonValue(),
+            }
+            # the sidecar goes in before the rename, so a stored dataset
+            # never appears without it
+            write_json(self._sidecar(staging), info)
+            path = os.path.join(self.warehouse_path, value.value_id)
+            # a dataset stored without a hash (an older sidecar) may already
+            # hold this value id; os.replace cannot move onto a full directory
+            shutil.rmtree(path, ignore_errors=True)
+            os.replace(staging, path)
+            self._hash_index[value._content_hash] = path
+        value.data = self._scan(path, info)
+        return path
+
     def load_value(self, path: str) -> Value:
         """Rehydrate a stored table value (lazy — just a parquet scan plan).
-        Pedigree from the sidecar is restored so lineage survives restarts."""
+        Pedigree and content hash from the sidecar are restored, so lineage
+        survives restarts and a ``data_hash`` key never rescans it."""
         from ..values import ValuePedigree
 
-        meta_path = self._sidecar(path)
-        info = {}
-        if os.path.isfile(meta_path):
-            with open(meta_path) as f:
-                info = json.load(f)
-        reader = self._context.spark.read
-        if info.get("spark_schema"):
-            # the sidecar schema makes the load a pure plan: without it,
-            # spark.read.parquet runs a footer-inference job, and a
-            # cross-restart cache hit would no longer be zero Spark jobs
-            from pyspark.sql.types import StructType
-
-            reader = reader.schema(StructType.fromJson(info["spark_schema"]))
-        df = reader.parquet(path)
+        info = self._read_sidecar(path)
+        df = self._scan(path, info)
         ped = ORPHAN
         if p := info.get("pedigree"):
             if p.get("module_type") and p["module_type"] != ORPHAN.module_type:
@@ -250,6 +313,7 @@ class DataRegistry:
             value_id=info.get("value_id"),
             pedigree=ped,
         )
+        value._content_hash = info.get("content_hash")
         # property links survive restarts (resolution works once the
         # referenced property values are themselves registered/loaded)
         value.property_links.update(info.get("property_links") or {})

@@ -15,13 +15,12 @@ A cache hit returns the prior ValueMap, so it skips composition and the
 Spark jobs a module fires while building its outputs (``cut_lineage``,
 driver collects).  Module outputs are *lazy* DataFrames: consuming a hit
 re-executes its plan, except for the table pages and show strings that
-``kiara_spark.io`` memoizes per DataFrame.
+``kiara_spark.io`` memoizes per DataFrame, and except for saved outputs,
+which read their stored files once ``persist_record`` has written them.
 """
 
 from __future__ import annotations
 
-import json
-import logging
 import os
 import time
 from collections.abc import Mapping
@@ -29,13 +28,12 @@ from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
 from ..hashing import job_hash as _job_hash
+from ..jsonfile import read_json, write_json
 from ..values import ValueMap
 
 if TYPE_CHECKING:
     from ..context import KiaraContext
     from ..modules import KiaraModule
-
-logger = logging.getLogger(__name__)
 
 
 @dataclass
@@ -66,22 +64,8 @@ class JobRegistry:
         # output dataset paths; enables cache hits ACROSS restarts when the
         # outputs were persisted to the warehouse.
         self._store_file = os.path.join(context.base_path, "job_records.json")
-        self._stored: dict[str, dict] = {}
-        try:
-            with open(self._store_file) as f:
-                self._stored = json.load(f)
-        except FileNotFoundError:
-            pass
-        except OSError:
-            logger.warning("job store %s unreadable; starting without it",
-                           self._store_file, exc_info=True)
-        except ValueError:
-            # a torn write: quarantine it so this and every later context
-            # starts from an empty store instead of raising
-            corrupt = self._store_file + ".corrupt"
-            os.replace(self._store_file, corrupt)
-            logger.warning("job store %s is corrupt; moved to %s",
-                           self._store_file, corrupt)
+        self._stored: dict[str, dict] = read_json(
+            self._store_file, "job store", default={})
 
     def _environment(self) -> dict:
         """Runtime fingerprint recorded in job records, mirroring the
@@ -196,11 +180,7 @@ class JobRegistry:
             "outputs": paths,
             "complete": not skipped,
         }
-        # temp file + rename: a crash mid-write leaves the old store whole
-        tmp = self._store_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._stored, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._store_file)
+        write_json(self._store_file, self._stored, indent=1, sort_keys=True)
 
     def _probe_stored(self, key: str) -> ValueMap | None:
         info = self._stored.get(key)

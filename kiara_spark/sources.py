@@ -136,15 +136,15 @@ class JsonlWriter(DataSourceWriter):
         return _WroteFile(path=name, n_rows=n)
 
     def commit(self, messages) -> None:
-        import json
         import os
+
+        from .jsonfile import write_json
 
         manifest = {
             "files": sorted(m.path for m in messages),
             "n_rows": sum(m.n_rows for m in messages),
         }
-        with open(os.path.join(self.path, "_MANIFEST.json"), "w") as fh:
-            json.dump(manifest, fh)
+        write_json(os.path.join(self.path, "_MANIFEST.json"), manifest)
 
     def abort(self, messages) -> None:
         import os
@@ -186,16 +186,16 @@ class JsonlStreamWriter(DataSourceStreamWriter):
         return _WroteFile(path=name, n_rows=n)
 
     def commit(self, messages, batchId: int) -> None:
-        import json
         import os
+
+        from .jsonfile import write_json
 
         manifest = {
             "batch_id": batchId,
             "files": sorted(m.path for m in messages if m),
             "n_rows": sum(m.n_rows for m in messages if m),
         }
-        with open(os.path.join(self.path, f"_EPOCH_{batchId}.json"), "w") as fh:
-            json.dump(manifest, fh)
+        write_json(os.path.join(self.path, f"_EPOCH_{batchId}.json"), manifest)
 
     def abort(self, messages, batchId: int) -> None:
         import os

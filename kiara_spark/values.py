@@ -9,6 +9,11 @@ Design decisions vs the reference:
 - Content hashes for DataFrame values are computed *lazily on demand*
   (``Value.content_hash``) because hashing a 100 TB dataset is a full scan;
   the `value_id` cache strategy (the reference's default) never needs it.
+  Saving a value takes its hash during the write, and a value loaded from
+  the warehouse carries the hash its sidecar recorded, so neither scans.
+- After a save, a value's payload is rebound to a scan of its stored files
+  (``DataRegistry.store_value``): later consumers read what was written
+  instead of re-running the plan.  The content is unchanged.
 - Pedigree is recorded eagerly at creation — it is metadata-only and cheap.
 """
 

@@ -32,6 +32,8 @@ from typing import TYPE_CHECKING, Any, Mapping
 
 from pyspark.sql import DataFrame
 
+from .jsonfile import write_json
+
 if TYPE_CHECKING:
     from .context import KiaraContext
     from .values import ValueMap
@@ -167,14 +169,13 @@ class Workflow:
         self._snapshots.append(snap)
         if save:
             os.makedirs(os.path.dirname(self._path), exist_ok=True)
-            with open(self._path, "w") as f:
-                json.dump({
-                    "alias": self.alias,
-                    "steps": self._steps,
-                    "input_aliases": self._input_aliases,
-                    "output_aliases": self._output_aliases,
-                    "snapshots": self._snapshots,
-                }, f, indent=1, default=str)
+            write_json(self._path, {
+                "alias": self.alias,
+                "steps": self._steps,
+                "input_aliases": self._input_aliases,
+                "output_aliases": self._output_aliases,
+                "snapshots": self._snapshots,
+            }, indent=1, default=str)
         return snap
 
     @property

@@ -2,6 +2,8 @@
 (SURVEY §1.1, §4): dedup-by-hash, value_id/data_hash cache strategies,
 non-idempotent bypass."""
 
+import os
+
 import pytest
 
 from kiara_spark.hashing import dataframe_content_hash, job_hash, manifest_hash
@@ -401,3 +403,194 @@ def test_page_memo_keeps_nothing_when_the_page_raises(spark):
     with pytest.raises(Exception, match="boom"):
         io.collect_table_page(df, 0, 3)
     assert df not in io._page_memo
+
+
+# -- one-pass save (DataRegistry.store_value) ------------------------------------
+
+@pytest.fixture
+def home_ctx(spark, tmp_path):
+    from kiara_spark import KiaraContext
+
+    return KiaraContext(spark=spark, base_path=str(tmp_path))
+
+
+def _crafted_frames(spark):
+    """Frames over every column shape the row hash must see through."""
+    from pyspark.sql import functions as F
+
+    return {
+        "empty": spark.range(0).selectExpr("id", "cast(id as string) as s"),
+        "nulls": spark.createDataFrame(
+            [(1, None, "a"), (None, 2.5, None), (None, None, None)],
+            "a bigint, b double, c string"),
+        "decimals": spark.range(200).selectExpr(
+            "cast(id * 1234567.891 as decimal(20,3)) as d",
+            "cast(id as decimal(38,0)) * 99999999999999999 as big"),
+        "timestamps": spark.range(50).selectExpr(
+            "timestamp_seconds(id * 86401) as ts", "date_add('2020-02-28', cast(id as int)) as d"),
+        "nested": spark.range(30).select(
+            F.col("id"),
+            F.array(F.col("id"), F.lit(None).cast("long")).alias("arr"),
+            F.create_map(F.col("id").cast("string"), F.col("id") * 2).alias("m"),
+            F.struct(F.col("id").alias("x"),
+                     F.lit("y").alias("y")).alias("st")),
+        "multi_partition": spark.range(0, 5000, numPartitions=7).selectExpr(
+            "id", "id % 13 as g", "sha2(cast(id as string), 256) as h"),
+    }
+
+
+def test_store_value_never_runs_a_hashing_scan(home_ctx, spark, monkeypatch):
+    """The content hash comes from the write itself: neither a direct store
+    nor a ``run_job(save=...)`` calls ``dataframe_content_hash``."""
+    import kiara_spark.hashing as hashing
+
+    def scan(df):
+        raise AssertionError("store_value ran a hashing scan")
+
+    monkeypatch.setattr(hashing, "dataframe_content_hash", scan)
+    v = home_ctx.register_table(spark.range(100).selectExpr("id", "id % 3 as g"))
+    home_ctx.data_registry.store_value(v)
+    assert v._content_hash in home_ctx.data_registry._hash_index
+    out = home_ctx.run_job("table.query.sql", {
+        "table": v, "query": "SELECT g, count(*) AS n FROM data GROUP BY g"},
+        save="counts")
+    assert out["table"].content_hash() in home_ctx.data_registry._hash_index
+
+
+def test_one_pass_hash_equals_the_scan_hash(home_ctx, spark):
+    """Bit-identical to ``dataframe_content_hash``, so warehouses written
+    before the one-pass save keep deduplicating."""
+    for name, df in _crafted_frames(spark).items():
+        expected = dataframe_content_hash(df)
+        v = home_ctx.register_table(df)
+        home_ctx.data_registry.store_value(v)
+        assert v.content_hash() == expected, name
+
+
+def test_failing_store_leaves_nothing_behind(home_ctx, spark):
+    """A plan that raises mid-write makes ``store_value`` raise (it must not
+    wait for metrics that never come) and leaves no dataset, staging
+    directory or hash-index entry."""
+    from pyspark.sql import functions as F
+
+    reg = home_ctx.data_registry
+    df = spark.range(100).withColumn(
+        "z", F.when(F.col("id") == 57, F.raise_error(F.lit("boom")))
+        .otherwise(F.lit(1)))
+    before = sorted(os.listdir(reg.warehouse_path))
+    index = dict(reg._hash_index)
+    v = home_ctx.register_table(df)
+    with pytest.raises(Exception, match="boom"):
+        reg.store_value(v)
+    assert sorted(os.listdir(reg.warehouse_path)) == before
+    assert reg._hash_index == index
+    assert v._content_hash is None
+
+
+def test_saved_output_reads_its_stored_files(home_ctx, tables):
+    """After ``run_job(save=...)`` the output's plan scans the warehouse
+    dataset, not the tables it was computed from."""
+    home_ctx.register_table(tables["orders"].data, alias="orders")
+    out = home_ctx.run_job("table.query.sql", {
+        "table": home_ctx.get_value("orders"),
+        "query": "SELECT o_orderstatus, count(*) AS n FROM data GROUP BY 1"},
+        save="by_status")
+    path = home_ctx.data_registry._stored_aliases["by_status"]
+    files = out["table"].data.inputFiles()
+    assert files and all(f"{path}/part-" in f for f in files)
+    assert out["table"].data.count() == 3
+
+
+def test_dedup_hit_never_changes_a_value(home_ctx, spark):
+    """The hash ignores row and column order, so a dedup hit may be stored
+    in another row order or with its columns in another order: such a
+    value keeps its own plan.  An unordered value with the stored columns
+    is served from the stored files."""
+    reg = home_ctx.data_registry
+    df = spark.range(300, numPartitions=3).selectExpr("id", "id % 7 as g")
+    p1 = reg.store_value(home_ctx.register_table(df.orderBy("id")))
+    desc_df = df.orderBy(df.id.desc())
+    swapped_df = df.select("g", "id")
+    desc = home_ctx.register_table(desc_df)
+    swapped = home_ctx.register_table(swapped_df)
+    plain = home_ctx.register_table(df)
+    assert (reg.store_value(desc) == reg.store_value(swapped)
+            == reg.store_value(plain) == p1)
+    assert desc.data is desc_df and swapped.data is swapped_df
+    assert desc.data.first()["id"] == 299
+    assert swapped.data.columns == ["g", "id"]
+    assert plain.data is not df
+    assert all(f"{p1}/part-" in f for f in plain.data.inputFiles())
+
+
+def test_stored_ordered_value_reads_back_in_order(home_ctx, spark):
+    """A globally sorted value written as several part files must read back
+    in order, both right after the save and in a new context.  Later rows
+    carry longer payloads, so the last files are the largest: a single scan
+    packs files largest-first and would start from them."""
+    from kiara_spark import KiaraContext
+
+    conf = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(conf)
+    df = spark.range(400).selectExpr(
+        "id",
+        "concat_ws('', transform(sequence(0, cast(id / 4 as int)), "
+        "i -> sha2(cast(id * 1000 + i as string), 256))) as pad",
+    ).orderBy("id")
+    v = home_ctx.register_table(df)
+    spark.conf.set(conf, "100")
+    try:
+        path = home_ctx.store_value(v, alias="sorted")
+    finally:
+        spark.conf.set(conf, old)
+    assert len([f for f in os.listdir(path) if f.startswith("part-")]) > 1
+    expected = list(range(400))
+    assert [r.id for r in v.data.select("id").collect()] == expected
+    ctx2 = KiaraContext(spark=spark, base_path=home_ctx.base_path)
+    loaded = ctx2.get_value("alias:sorted")
+    assert [r.id for r in loaded.data.select("id").collect()] == expected
+
+
+def test_loaded_value_keeps_its_stored_hash(home_ctx, spark):
+    """A value loaded from the warehouse carries its sidecar's hash:
+    ``content_hash`` runs no Spark job."""
+    from kiara_spark import KiaraContext
+
+    v = home_ctx.register_table(spark.range(40).selectExpr("id", "id * 3 as t"))
+    home_ctx.store_value(v, alias="kept")
+    ctx2 = KiaraContext(spark=spark, base_path=home_ctx.base_path)
+    loaded = ctx2.get_value("alias:kept")
+    h, jobs = _spark_jobs(spark, loaded.content_hash)
+    assert h == v.content_hash()
+    assert jobs == []
+
+
+def test_torn_alias_store_and_sidecar_are_quarantined(home_ctx, spark, caplog):
+    """A truncated ``_aliases.json`` or value sidecar must not stop a
+    context from starting: each is moved aside with a warning, and the
+    other stored values still load."""
+    import logging
+
+    from kiara_spark import KiaraContext
+
+    reg = home_ctx.data_registry
+    torn_v = home_ctx.register_table(spark.range(5).selectExpr("id"))
+    kept_v = home_ctx.register_table(spark.range(9).selectExpr("id"))
+    torn_path = home_ctx.store_value(torn_v, alias="torn")
+    home_ctx.store_value(kept_v, alias="kept")
+    aliases = os.path.join(reg.warehouse_path, "_aliases.json")
+    sidecar = os.path.join(torn_path, "_kiara_value.json")
+    for f in (aliases, sidecar):
+        with open(f) as fh:
+            text = fh.read()
+        with open(f, "w") as fh:
+            fh.write(text[:7])
+
+    with caplog.at_level(logging.WARNING):
+        ctx2 = KiaraContext(spark=spark, base_path=home_ctx.base_path)
+    assert caplog.text.count("is corrupt") == 2
+    assert os.path.isfile(aliases + ".corrupt")
+    assert os.path.isfile(sidecar + ".corrupt")
+    assert ctx2.data_registry._stored_aliases == {}
+    assert ctx2.get_value(kept_v.value_id).data.count() == 9
+    assert kept_v.content_hash() in ctx2.data_registry._hash_index
